@@ -2,6 +2,7 @@ package graft.api
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.InetSocketAddress
+import java.util.concurrent.{ExecutorService, Executors}
 import java.nio.charset.StandardCharsets
 
 /** The reference's HTTP serving facade over the status queries — the two
@@ -21,13 +22,16 @@ import java.nio.charset.StandardCharsets
   * Scale note: the per-request `.collect()` is bounded by construction —
   * a point lookup returns ≤ 1 row and list-uploads ≤ `limit` (capped) —
   * and the ledger it scans is upload METADATA (one row per upload), not
-  * data. At production scale the same plan would sit behind a cached
-  * snapshot; the serving semantics — and everything the tests assert —
-  * are in the query layer, which is shared.
+  * data. Each request filters the ledger's head: once the ledger's chains
+  * are read more than once, `LedgerStore` persists each chain's
+  * merge-on-read resolution, and a request on a resolved head is one scan
+  * job. Requests are served concurrently from a fixed pool sized to the
+  * available processors; the serving semantics — and everything the tests
+  * assert — are in the query layer, which is shared.
   */
 class StatusHttp(queries: StatusQueries, maxLimit: Int = 1000) {
 
-  private var server: Option[HttpServer] = None
+  private var server: Option[(HttpServer, ExecutorService)] = None
 
   /** Start on `port` (0 = ephemeral); returns the bound port. Binds
     * loopback by default — a status surface over ingest metadata has no
@@ -58,14 +62,20 @@ class StatusHttp(queries: StatusQueries, maxLimit: Int = 1000) {
       }
       limit.map(n => queries.listUploads(params.get("status"), n))
     })
-    s.setExecutor(null) // current-thread dispatch; bounded work per request
+    val pool = Executors.newFixedThreadPool(
+      Runtime.getRuntime.availableProcessors(), { (r: Runnable) =>
+        val t = new Thread(r, "status-http")
+        t.setDaemon(true)
+        t
+      })
+    s.setExecutor(pool)
     s.start()
-    server = Some(s)
+    server = Some((s, pool))
     s.getAddress.getPort
   }
 
   def stop(): Unit = synchronized {
-    server.foreach(_.stop(0))
+    server.foreach { case (s, pool) => s.stop(0); pool.shutdown() }
     server = None
   }
 

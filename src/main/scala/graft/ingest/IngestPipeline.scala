@@ -67,8 +67,9 @@ class IngestPipeline(
   /** Discover files in `inbox` as a METADATA-ONLY events DataFrame:
     * path, bucket_name, file_name, file_size, created_iso. The binaryFile
     * source only reads content when the content column is projected — it
-    * isn't, so this is a listing-priced scan. Zero-byte files still list,
-    * matching a GCS zero-byte object.
+    * isn't, so this is a listing-priced scan. Zero-byte files do NOT list:
+    * Spark's file sources skip them (batch and streaming), so they leave no
+    * ledger trace, where the reference fails a zero-byte upload.
     */
   def discover(inbox: String): DataFrame =
     spark.read.format("binaryFile").load(inbox)
@@ -150,23 +151,21 @@ class IngestPipeline(
           substring(sha2(coalesce(col("content"), lit("")), 256), 1, 16))
       }
 
-    val ledger = store.read().persist()
     // D1 — idempotency: skip `done`; additionally skip quarantined rows
     // (attempts exhausted — the reference's DLQ'd messages also never
-    // re-enter processing, ARCHITECTURE.md:69-79).
-    val blockedKeys = ledger
-      .filter(col("status") === UploadStatus.Done ||
-        (col("status") === UploadStatus.Failed && col("attempts") >= maxAttempts))
-      .select("upload_id")
-    val priorAttempts = ledger.select(col("upload_id"),
+    // re-enter processing, ARCHITECTURE.md:69-79). One broadcast carries
+    // the block flag and the retry count (the head has one row per key).
+    val ledger = store.read().select(col("upload_id"),
+      (col("status") === UploadStatus.Done || (col("status") ===
+        UploadStatus.Failed && col("attempts") >= maxAttempts)).as("blocked"),
       coalesce(col("attempts"), lit(0)).as("prior_attempts"))
 
     val todo = csvEvents
-      .join(broadcast(blockedKeys), Seq("upload_id"), "left_anti")
+      .join(broadcast(ledger), Seq("upload_id"), "left")
+      .filter(!coalesce(col("blocked"), lit(false))).drop("blocked")
       // Within-batch dedup: two events for the same object in one batch
       // collapse to one (the reference's TOCTOU race, fixed — ST5).
       .dropDuplicates("upload_id")
-      .join(broadcast(priorAttempts), Seq("upload_id"), "left")
       .na.fill(0, Seq("prior_attempts"))
       .persist() // metadata-only rows (or +content in streaming) — small
 
@@ -180,7 +179,7 @@ class IngestPipeline(
     // content reads. A scheduled re-run over an all-ingested inbox costs
     // one metadata listing and nothing else.
     if (todoN == 0) {
-      todo.unpersist(); ledger.unpersist()
+      todo.unpersist()
       return IngestResult(discovered, discovered, 0, 0, 0)
     }
 
@@ -309,7 +308,7 @@ class IngestPipeline(
     // S6 — the terminal idempotent MERGE (must-exist).
     store.merge(updates, requireExisting = true)
 
-    updates.unpersist(); todo.unpersist(); ledger.unpersist()
+    updates.unpersist(); todo.unpersist()
     IngestResult(discovered, discovered - doneN - failedN, doneN, failedN,
       quarantinedN)
   }

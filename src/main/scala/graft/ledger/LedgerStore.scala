@@ -4,6 +4,7 @@ import graft.model.Ledger
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 
@@ -57,10 +58,30 @@ import java.util.UUID
   * Firestore writes were per-document too); reads are one bounded
   * merge-on-read aggregation keyed on `upload_id` — and callers broadcast
   * the `done` key set against the (huge) event stream, never the reverse.
+  *
+  * Head cache: `read()` resolves each live chain through one shared
+  * entry per (session, qualified ledger path), so every `LedgerStore` on a
+  * directory sees the same head. The entry is keyed on the chain itself
+  * (the pointer listing, no Spark job), so an exact match can never be
+  * stale — generations are immutable, and any publish (merge, compaction,
+  * overwrite, another process) changes the chain. Persisting is chosen by
+  * reuse: while no chain of the ledger has been read twice, a chain read
+  * once is served as its plain plan, so one-off readers (a point lookup,
+  * an ingest pass that publishes right after its read) keep the key
+  * filter pushed into every generation scan and pin no storage, and the
+  * second read of a chain persists it. Once a chain has been read twice
+  * the ledger has readers that come back (a status poller beside ingest
+  * passes), and every later chain is persisted on its first read; lookups
+  * then filter the cached head. A new chain unpersists the head it
+  * supersedes, and `Q.release` (via [[LedgerStore.release]]) frees them
+  * all. A query still in flight on a head that was unpersisted under it
+  * recomputes that head from its generation dirs, which the sweep's grace
+  * window keeps on disk. [[readAt]] is never cached.
   */
 class LedgerStore(spark: SparkSession, dir: String,
     compactEvery: Int = 8) {
   import Ledger.{key, schema, valueColumns}
+  import LedgerStore.ChainLink
 
   private val rootPath = new Path(dir)
   private def fs: FileSystem =
@@ -78,9 +99,7 @@ class LedgerStore(spark: SparkSession, dir: String,
     } finally in.close()
   }
 
-  /** One link of the live chain: a base snapshot or a delta generation. */
-  private[ledger] case class ChainLink(seq: Long, dirName: String,
-      isDelta: Boolean, requireExisting: Boolean)
+  private lazy val qualifiedRoot = fs.makeQualified(rootPath).toString
 
   private def parsePtr(seq: Long, content: String): ChainLink =
     if (content.startsWith("deltar:"))
@@ -190,9 +209,15 @@ class LedgerStore(spark: SparkSession, dir: String,
     * merge-on-read: per key, per column, the latest non-null value in
     * generation order, with must-exist delta rows dropped unless the key
     * was created (by a base or a plain-merge delta) at or before that
-    * generation. One bounded aggregation keyed on `upload_id`.
+    * generation. One bounded aggregation keyed on `upload_id`, resolved
+    * once per chain when the ledger's chains are read again (see the
+    * class doc).
     */
-  def read(): DataFrame = readChain(liveChain())
+  def read(): DataFrame = {
+    val ch = liveChain()
+    if (ch.isEmpty) emptyLedger
+    else LedgerStore.head(spark, qualifiedRoot, ch)(readChain(ch))
+  }
 
   /** Time travel: the ledger state a reader observed when generation
     * `asOf` was the head — the same merge-on-read resolution, just pinned
@@ -349,7 +374,7 @@ class LedgerStore(spark: SparkSession, dir: String,
       while (!published && attempt < maxPublishRetries) {
         attempt += 1
         try {
-          LedgerStore.publishLock(fs.makeQualified(rootPath).toString)
+          LedgerStore.publishLock(qualifiedRoot)
             .synchronized { publishPointer(content, currentPointer()) }
           published = true
         } catch {
@@ -434,7 +459,7 @@ class LedgerStore(spark: SparkSession, dir: String,
     */
   private def publishPointer(content: String,
       expected: Option[(Long, String)]): Unit =
-    LedgerStore.publishLock(fs.makeQualified(rootPath).toString).synchronized {
+    LedgerStore.publishLock(qualifiedRoot).synchronized {
       val nextSeq = expected.map(_._1 + 1).getOrElse(1L)
       val tmp = new Path(rootPath, s"_tmp-${UUID.randomUUID().toString.take(8)}")
       val out = fs.create(tmp, true)
@@ -558,6 +583,66 @@ object LedgerStore {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def publishLock(path: String): Object =
     publishLocks.computeIfAbsent(path, _ => new Object)
+
+  /** One link of the live chain: a base snapshot or a delta generation. */
+  private[ledger] final case class ChainLink(seq: Long, dirName: String,
+      isDelta: Boolean, requireExisting: Boolean)
+
+  /** The held head of one (session, ledger): the chain last resolved, its
+    * resolution, and whether any chain of the ledger has been read twice.
+    * Guarded by its own monitor, which covers only these fields: no Spark
+    * work runs under it. */
+  private final class Head {
+    var chain: Seq[ChainLink] = Nil
+    var df: DataFrame = _
+    var reread = false
+  }
+
+  /** The head cache (see the class doc), keyed like [[publishLocks]] plus
+    * the session. */
+  private val heads =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Head]()
+
+  /** The resolution of `chain` on the ledger at `path`, held as its new
+    * head (the superseded one is unpersisted). Until some chain of the
+    * ledger is read twice, a chain's first read gets its plain plan and
+    * its second read persists a fresh resolution: a fresh DataFrame's plan
+    * is optimized only after the persist, so it is served from the cache.
+    * From then on the ledger has readers that come back, and each new
+    * chain is persisted on its first read, so a reader that follows a
+    * publish (an ingest pass after a status poll) finds it resolved. A
+    * reader that listed just before a publish, while a newer chain is
+    * held, gets its plain plan and evicts nothing. Spark caches by plan,
+    * so "persisted" is a property of the chain, whichever DataFrame of it
+    * asks. */
+  private[ledger] def head(spark: SparkSession, path: String,
+      chain: Seq[ChainLink])(resolve: => DataFrame): DataFrame = {
+    val h = heads.computeIfAbsent((spark, path), _ => new Head)
+    val (held, reread) =
+      h.synchronized((if (h.chain == chain) h.df else null, h.reread))
+    if (held != null && held.storageLevel != StorageLevel.NONE) return held
+    val fresh = if (held == null && !reread) resolve else resolve.persist()
+    var drop: DataFrame = null
+    h.synchronized {
+      if (held != null) h.reread = true
+      if (h.chain.nonEmpty && h.chain.last.seq > chain.last.seq) drop = fresh
+      else { if (h.chain != chain) drop = h.df; h.chain = chain; h.df = fresh }
+    }
+    // outside the monitor; a stale chain persisted above is dropped here
+    if (drop != null) drop.unpersist(blocking = false)
+    fresh
+  }
+
+  /** Unpersist and forget every ledger head cached for `spark` (the
+    * session's release path, `Q.release`, calls this between query sets
+    * and at teardown, not beside live readers). */
+  def release(spark: SparkSession): Unit =
+    heads.keySet.forEach { k =>
+      if (k._1 eq spark) Option(heads.remove(k)).foreach { h =>
+        val df = h.synchronized(h.df)
+        if (df != null) df.unpersist(blocking = false)
+      }
+    }
 }
 
 /** A ledger publish lost the compare-and-swap race: another writer

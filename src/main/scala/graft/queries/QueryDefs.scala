@@ -200,11 +200,12 @@ object Q {
     }
 
   /** Release every memoized intermediate held for `s` (all data dirs, all
-    * tags): unpersist the blocks and drop the memo entries so the next
-    * `cached` call rebuilds. Called between bench/verify query sets and at
-    * spec teardown — without it, a long single-JVM sweep accumulates every
-    * persisted intermediate (fingerprints, signatures, gram sets, cluster
-    * assignments, …) in executor storage for the rest of the run, and late
+    * tags) and every ledger head cached for it: unpersist the blocks and
+    * drop the memo entries so the next `cached` call rebuilds. Called
+    * between bench/verify query sets and at spec teardown — without it, a
+    * long single-JVM sweep accumulates every persisted intermediate
+    * (fingerprints, signatures, gram sets, cluster assignments, …) in
+    * executor storage for the rest of the run, and late
     * queries pay the eviction + GC churn. A later set that reuses an
     * earlier set's intermediate rebuilds it once; that one rebuild is
     * cheaper than carrying all sets' blocks to the end of the sweep.
@@ -229,6 +230,8 @@ object Q {
     keys.foreach { k =>
       memo.remove(k).foreach(_.unpersist(blocking = false))
     }
+    // ledger heads are never shared across query sets
+    graft.ledger.LedgerStore.release(s)
   }
 
   /** Release the memoized intermediates for one (session, data dir) pair —

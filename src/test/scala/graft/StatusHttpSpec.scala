@@ -100,6 +100,50 @@ class StatusHttpSpec extends SparkSpec {
     }
   }
 
+  test("concurrent clients on one head all get the query layer's bodies") {
+    val store = new LedgerStore(spark, tmpDir("http-concurrent") + "/ledger")
+    store.merge((1 to 30).map(i => (f"u$i%02d",
+        if (i % 4 == 0) UploadStatus.Failed else UploadStatus.Done, i.toLong))
+      .toDF("upload_id", "status", "lines_processed"))
+    val queries = new StatusQueries(store)
+    def body(df: org.apache.spark.sql.DataFrame) =
+      df.toJSON.collect().mkString("[", ",", "]")
+    // the expected bodies: the query layer over the same (unchanged) head
+    val expected = (1 to 30 by 3).map { i =>
+      val id = f"u$i%02d"
+      s"/get-upload-status?upload_id=$id" -> body(queries.getUploadStatus(id))
+    } ++ Seq(None -> 10, Some(UploadStatus.Done) -> 5,
+        Some(UploadStatus.Failed) -> 100).map { case (status, limit) =>
+      val q = status.map(s => s"status=$s&").getOrElse("") + s"limit=$limit"
+      s"/list-uploads?$q" -> body(queries.listUploads(status, limit))
+    }
+    val http = new StatusHttp(queries)
+    val port = http.start()
+    val clients = 8
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(clients)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    try {
+      val got = Await.result(Future.sequence((0 until clients).map { c =>
+        // each client walks every request, starting at its own offset
+        Future {
+          expected.indices.map { k =>
+            val (path, _) = expected((k + c) % expected.size)
+            path -> get(port, path)
+          }
+        }
+      }), 5.minutes).flatten
+      assert(got.size == clients * expected.size)
+      val want = expected.toMap
+      got.foreach { case (path, (code, b)) =>
+        assert(code == 200, s"$path: $b")
+        assert(b == want(path), s"$path served a body the query layer did not")
+      }
+    } finally { http.stop(); pool.shutdown() }
+  }
+
   test("non-GET methods and unknown paths are rejected") {
     withServer { port =>
       val conn = URI.create(s"http://127.0.0.1:$port/list-uploads").toURL
