@@ -21,11 +21,14 @@ case class IngestResult(discovered: Long, skipped: Long, done: Long,
   * Spark shape: METADATA-ONLY file listing → `filter` → `withColumn
   * (upload_id)` → broadcast LEFT ANTI join vs the ledger's done/quarantined
   * keys → `pending` MERGE → `processing` MERGE (must-exist) → content read
-  * FOR THE TODO FILES ONLY → per-file line count + validation → terminal
-  * MERGE (must-exist, Firestore `update()` semantics) → failures carry an
-  * `attempts` counter;
-  * `attempts >= maxAttempts` rows go to a quarantine parquet table (the
-  * DLQ) and stop being retried.
+  * FOR THE TODO FILES ONLY → per-file line count + validation → failures
+  * carry an `attempts` counter, and `attempts >= maxAttempts` rows go to a
+  * quarantine parquet table (the DLQ) and stop being retried → terminal
+  * MERGE (must-exist, Firestore `update()` semantics) → sweep/compaction.
+  * The pending and processing merges defer ledger maintenance
+  * ([[graft.ledger.LedgerStore.deferMaintenance]]), so a compaction they
+  * make due runs after the terminal MERGE has published each file's
+  * done|failed row, not before it.
   *
   * Scale design (the 100 TB lens):
   *  - Discovery reads the file *listing*, not file bytes: binaryFile with
@@ -183,22 +186,28 @@ class IngestPipeline(
       return IngestResult(discovered, discovered, 0, 0, 0)
     }
 
-    // A1 — observable `pending` upsert BEFORE any processing, exactly the
-    // reference's write order (main.py:61-68). A crash after this merge
-    // leaves real pending rows a status query can see.
-    store.merge(todo.select(
-      col("upload_id"), col("bucket_name"), col("file_name"),
-      col("file_size"), lit(UploadStatus.Pending).as("status"),
-      ts.as("queued_at")))
+    // Ledger maintenance (retention sweep, compaction) made due by the
+    // pending and processing merges waits for the terminal merge below,
+    // which publishes this pass's terminal rows first and then maintains.
+    store.deferMaintenance {
+      // A1 — observable `pending` upsert BEFORE any processing, exactly
+      // the reference's write order (main.py:61-68). A crash after this
+      // merge leaves real pending rows a status query can see.
+      store.merge(todo.select(
+        col("upload_id"), col("bucket_name"), col("file_name"),
+        col("file_size"), lit(UploadStatus.Pending).as("status"),
+        ts.as("queued_at")))
 
-    // A2 — observable `processing` before the content read, must-exist
-    // like Firestore update() (main.py:110-113; rows exist: A1 wrote them).
-    // Full 4-state machine pending → processing → done|failed is now
-    // externally visible between merges, matching the reference's ledger.
-    store.merge(todo.select(
-      col("upload_id"), lit(UploadStatus.Processing).as("status"),
-      ts.as("processing_started_at")),
-      requireExisting = true)
+      // A2 — observable `processing` before the content read, must-exist
+      // like Firestore update() (main.py:110-113; rows exist: A1 wrote
+      // them). Full 4-state machine pending → processing → done|failed is
+      // now externally visible between merges, matching the reference's
+      // ledger.
+      store.merge(todo.select(
+        col("upload_id"), lit(UploadStatus.Processing).as("status"),
+        ts.as("processing_started_at")),
+        requireExisting = true)
+    }
 
     // S3 + A-L1 + F5 — content read for todo files only (scale: O(new), not
     // O(inbox)), line-counted (split-fencepost) and validated. Two read
@@ -305,7 +314,8 @@ class IngestPipeline(
       quarantined.withColumn("quarantined_at", ts)
         .write.mode("append").parquet(quarantineDir)
 
-    // S6 — the terminal idempotent MERGE (must-exist).
+    // S6 — the terminal idempotent MERGE (must-exist); it publishes, then
+    // runs the maintenance the two merges above deferred.
     store.merge(updates, requireExisting = true)
 
     updates.unpersist(); todo.unpersist()

@@ -36,6 +36,21 @@ import java.util.UUID
   * O(base + bounded deltas). Readers never observe a partial write; a
   * crash before publish leaves the old head live.
   *
+  * Maintenance: after its publish, a merge runs the retention sweep and,
+  * once the chain holds `compactEvery` deltas, the compaction — both on
+  * the merging thread, before `merge` returns. Merges inside a
+  * [[deferMaintenance]] scope publish the same way but leave both to the
+  * next merge outside it, so an ingest pass publishes its terminal rows
+  * before the compaction its earlier merges made due (maintenance stays
+  * off the path that acknowledges a status, as in an LSM-tree). Chain
+  * bound: a maintaining merge returns with fewer than `compactEvery`
+  * deltas live (unless its compaction lost a publish race, see
+  * [[maybeCompact]]); an ingest pass peaks at `compactEvery + 2` between
+  * its terminal publish and its compaction, and a successful pass returns
+  * below `compactEvery` like a direct merge. A pass that fails between
+  * its processing and terminal merges leaves its 2 deferred deltas beyond
+  * the bound until the next maintaining merge compacts them.
+  *
   * Writer safety is COMPARE-AND-SWAP, not convention: a writer that read
   * head seq S may only publish seq S+1 — via rename-WITHOUT-overwrite
   * (atomic-exclusive on HDFS), followed by a post-publish verification
@@ -291,6 +306,24 @@ class LedgerStore(spark: SparkSession, dir: String,
 
   private val UploadStatusValues = graft.model.UploadStatus.All.toSeq
 
+  /** Open [[deferMaintenance]] scopes on each thread, for this store. */
+  private val deferDepth = new ThreadLocal[Integer] {
+    override def initialValue(): Integer = 0
+  }
+
+  /** Run `body` with this store's maintenance held back on the calling
+    * thread: merges made inside publish their delta exactly as outside
+    * (same write, status check and CAS) but skip the retention sweep and
+    * the compaction; the next merge outside the scope runs both. Merges
+    * on other threads are unaffected. A scope that throws still closes,
+    * so the thread's next merge maintains again.
+    */
+  private[graft] def deferMaintenance[T](body: => T): T = {
+    val depth = deferDepth.get()
+    deferDepth.set(depth + 1)
+    try body finally deferDepth.set(depth)
+  }
+
   /** How many times a lost CAS race is retried before giving up. A delta
     * is self-contained, so a retry is just a re-publish at the new head —
     * no recomputation.
@@ -312,6 +345,12 @@ class LedgerStore(spark: SparkSession, dir: String,
     * Cost: O(updates) — one delta dir write plus a pointer publish; the
     * existing ledger is neither read nor rewritten. Lost CAS races are
     * retried here (bounded), honoring the documented retry contract.
+    *
+    * After the publish, the merge sweeps retention and compacts a chain
+    * that has reached `compactEvery` deltas, so it returns with fewer
+    * than `compactEvery` deltas live — unless it runs inside
+    * [[deferMaintenance]] on this thread, which publishes only and leaves
+    * the sweep and compaction to the next merge outside the scope.
     */
   def merge(updates: DataFrame, requireExisting: Boolean = false): Unit = {
     val aligned = {
@@ -385,8 +424,7 @@ class LedgerStore(spark: SparkSession, dir: String,
         }
       }
       if (!published) { fs.delete(target, true); throw lastLoss }
-      sweep()
-      maybeCompact()
+      if (deferDepth.get() == 0) { sweep(); maybeCompact() }
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftInternal, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -35,6 +35,12 @@ import org.apache.spark.storage.StorageLevel
   * for an O(log n)-round loop, and a cluster deployment can swap in
   * reliable `checkpoint()` against a checkpoint dir without touching the
   * algorithm.
+  *
+  * Checkpoint lifetime: a round's checkpoint is unpersisted as soon as
+  * the next round's checksum has materialized its successor, so a run
+  * pins one round of labels at a time, not one per round. The final
+  * round backs the returned labels and lives until the session's
+  * `Q.release`, which frees it through [[release]].
   *
   * Duplicate or self edges are harmless (min is idempotent); callers need
   * not dedup the pair list first.
@@ -106,13 +112,36 @@ object ConnectedComponents {
           .select(col("v"), col("c2").as("component"))
           .localCheckpoint(false) // truncate: see scaladoc (iterative plan)
         val cur = checksum(jumped)
+        // jumped is materialized: the round it supersedes is read no more
+        GraftInternal.checkpointedRdd(labels)
+          .foreach(_.unpersist(blocking = false))
         labels = jumped
         rounds += 1
         converged = cur == prev
         prev = cur
       }
       edges.unpersist()
+      GraftInternal.checkpointedRdd(labels)
+        .foreach(r => finals.put((spark, r.id), ()))
       (labels, rounds)
     } finally spark.conf.set("spark.sql.shuffle.partitions", sessionWidth)
+  }
+
+  /** (session, RDD id) of each run's final-round checkpoint. Ids rather
+    * than the RDDs, so labels a caller drops can still be reclaimed by
+    * GC (Spark's cleaner unpersists an unreachable persisted RDD). */
+  private val finals =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, Int), Unit]
+
+  /** Unpersist the final-round checkpoints of every run on `spark` (the
+    * session's release path, `Q.release`, calls this between query sets
+    * and at teardown). Labels from an earlier run must not be read after
+    * it: their lineage is truncated at the freed checkpoint. */
+  def release(spark: SparkSession): Unit = {
+    val persisted = spark.sparkContext.getPersistentRDDs
+    finals.keys.filter(_._1 eq spark).foreach { k =>
+      finals.remove(k)
+      persisted.get(k._2).foreach(_.unpersist(blocking = false))
+    }
   }
 }

@@ -23,6 +23,14 @@ import org.apache.spark.sql.functions._
   * schema misses and retrains. Writing a new key removes the artifact's
   * stale keys — the store never accumulates dead indexes.
   *
+  * The key also carries the artifact's algorithm VERSION, which its call
+  * site states next to the trainer: a content digest cannot see a trainer
+  * change, so without it a store written by older code would keep
+  * serving that code's artifact. Bump an artifact's version whenever a
+  * change to its trainer (or to anything the trainer reads) can change
+  * its output; the next read misses and retrains, and the old version's
+  * dir ages out under [[MaxKeysPerName]] like any dead key.
+  *
   * Artifacts stored here MUST be deterministic functions of their source
   * fixture (every trainer in this repo is — integer Lloyd with lowest-id
   * seeding, hash-derived LSH planes), otherwise a disk hit and a rebuild
@@ -132,16 +140,20 @@ object IndexStore {
     * dead key out of the store. */
   val MaxKeysPerName = 4
 
-  /** Read artifact `name` for fixture `key` from the store, building and
-    * persisting it first on a miss. After a build, the artifact's
-    * least-recently-used keys beyond [[MaxKeysPerName]] are evicted; a
-    * hit refreshes the key's recency.
+  /** Read artifact `name` at algorithm `version` for fixture `key` from
+    * the store, building and persisting it first on a miss. After a
+    * build, the artifact's least-recently-used keys beyond
+    * [[MaxKeysPerName]] are evicted; a hit refreshes the key's recency.
+    * `version` 0 leaves the key unversioned (`name-key`), for artifacts
+    * with no trainer to track; every trained artifact passes its own.
     */
   def cached(s: SparkSession, name: String, key: String,
-      rootDir: File = root)(build: => DataFrame): DataFrame = {
+      rootDir: File = root, version: Int = 0)(build: => DataFrame): DataFrame = {
     require(name.matches("[A-Za-z0-9_-]+"), s"unsafe artifact name: $name")
     require(key.matches("[A-Za-z0-9_-]+"), s"unsafe artifact key: $key")
-    val dir = new File(rootDir, s"$name-$key")
+    require(version >= 0, s"negative artifact version: $version")
+    val dir = new File(rootDir,
+      if (version == 0) s"$name-$key" else s"$name-v$version-$key")
     if (!new File(dir, "_SUCCESS").exists()) {
       val t0 = System.nanoTime()
       buildDepth.set(buildDepth.get() + 1)

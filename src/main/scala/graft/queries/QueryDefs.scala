@@ -200,7 +200,8 @@ object Q {
     }
 
   /** Release every memoized intermediate held for `s` (all data dirs, all
-    * tags) and every ledger head cached for it: unpersist the blocks and
+    * tags), every ledger head cached for it and the final-round checkpoint
+    * of every connected-components run on it: unpersist the blocks and
     * drop the memo entries so the next `cached` call rebuilds. Called
     * between bench/verify query sets and at spec teardown — without it, a
     * long single-JVM sweep accumulates every persisted intermediate
@@ -230,8 +231,10 @@ object Q {
     keys.foreach { k =>
       memo.remove(k).foreach(_.unpersist(blocking = false))
     }
-    // ledger heads are never shared across query sets
+    // ledger heads and connected-components checkpoints are never shared
+    // across query sets
     graft.ledger.LedgerStore.release(s)
+    graft.operators.ConnectedComponents.release(s)
   }
 
   /** Release the memoized intermediates for one (session, data dir) pair —

@@ -64,12 +64,14 @@ object SimilarityQueries {
       |  greatest(16, (SELECT count(*) FROM embeddings) // 125) - 1))) AS bw)""".stripMargin
 
   /** In-JVM memo (one materialization per sweep) over the disk store (one
-    * TRAINING per fixture ever) — the layering every trained artifact in
-    * this file uses. */
-  private def trainedArtifact(s: SparkSession, d: String, tag: String)(
-      build: => DataFrame): DataFrame =
+    * TRAINING per fixture and trainer `version` ever) — the layering every
+    * trained artifact in this file uses. Bump an artifact's `version` when
+    * its trainer changes (see IndexStore). */
+  private def trainedArtifact(s: SparkSession, d: String, tag: String,
+      version: Int)(build: => DataFrame): DataFrame =
     cached(s, d, tag) {
-      graft.operators.IndexStore.cached(s, tag, embKey(s, d))(build)
+      graft.operators.IndexStore.cached(s, tag, embKey(s, d),
+        version = version)(build)
     }
 
   /** IVF list count, derived from the corpus row count (same ~125
@@ -140,7 +142,7 @@ object SimilarityQueries {
   private def trainedCodebook(s: SparkSession, d: String): DataFrame =
     imiDepth(ivfLists(s, d)) match {
       case 1 =>
-        trainedArtifact(s, d, "ivf_codebook") {
+        trainedArtifact(s, d, "ivf_codebook", version = 1) {
           graft.operators.IvfCodebook.train(s,
             table(s, d, "embeddings").select(col("vec_id"), col("embedding")),
             k = ivfLists(s, d), iters = 2, sampleEvery = 4)
@@ -158,7 +160,7 @@ object SimilarityQueries {
   /** Level-1 (super) codebook of the hierarchical coarse quantizer:
     * ~√k lists trained by the same deterministic sampled Lloyd. */
   private def trainedSuper(s: SparkSession, d: String): DataFrame =
-    trainedArtifact(s, d, "ivf_super") {
+    trainedArtifact(s, d, "ivf_super", version = 1) {
       graft.operators.IvfCodebook.train(s,
         table(s, d, "embeddings").select(col("vec_id"), col("embedding")),
         k = ceilSqrt(ivfLists(s, d)), iters = 2, sampleEvery = 4)
@@ -195,7 +197,7 @@ object SimilarityQueries {
     // pre-change trees for large fixtures. Same retrain-on-key-change
     // discipline as a digest change. At every current scale passes = 0,
     // where the tag pins the refinement-free tree explicitly.
-    trainedArtifact(s, d, s"ivf_tree_r${passes}s2") {
+    trainedArtifact(s, d, s"ivf_tree_r${passes}s2", version = 1) {
       val k = ivfLists(s, d)
       val k1 = ceilSqrt(k)
       val emb = table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
@@ -216,14 +218,14 @@ object SimilarityQueries {
     * stay ∛n — document before dialing).
     */
   private def trainedSuper3(s: SparkSession, d: String): DataFrame =
-    trainedArtifact(s, d, "ivf_super3") {
+    trainedArtifact(s, d, "ivf_super3", version = 1) {
       graft.operators.IvfCodebook.train(s,
         table(s, d, "embeddings").select(col("vec_id"), col("embedding")),
         k = ceilCbrt(ivfLists(s, d)), iters = 2, sampleEvery = 4)
     }
 
   private def trainedMids3(s: SparkSession, d: String): DataFrame =
-    trainedArtifact(s, d, "ivf_mids3") {
+    trainedArtifact(s, d, "ivf_mids3", version = 1) {
       graft.operators.IvfCodebook.trainChildren(s,
         table(s, d, "embeddings").select(col("vec_id"), col("embedding")),
         trainedSuper3(s, d), k2 = ceilCbrt(ivfLists(s, d)), iters = 2,
@@ -231,7 +233,7 @@ object SimilarityQueries {
     }
 
   private def trainedGrand3(s: SparkSession, d: String): DataFrame =
-    trainedArtifact(s, d, "ivf_grand3") {
+    trainedArtifact(s, d, "ivf_grand3", version = 1) {
       val k = ivfLists(s, d)
       val c = ceilCbrt(k)
       graft.operators.IvfCodebook.trainGrandChildren(s,
@@ -247,7 +249,7 @@ object SimilarityQueries {
     * (vec_id, list_id) table instead of re-running the assignment scan.
     */
   private def corpusAssignment(s: SparkSession, d: String): DataFrame =
-    trainedArtifact(s, d, "ivf_assign") {
+    trainedArtifact(s, d, "ivf_assign", version = 1) {
       import graft.operators.IvfCodebook
       val v = table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       val cm = IvfCodebook.comps(v)
@@ -409,7 +411,7 @@ object SimilarityQueries {
       d: String): Array[Double] =
     pcaMemo.getOrElseUpdate((s, d), {
       import s.implicits._
-      trainedArtifact(s, d, "pca_loadings") {
+      trainedArtifact(s, d, "pca_loadings", version = 1) {
         trainPcaLoadings(s, d).toSeq.zipWithIndex
           .map { case (x, i) => ((i + 1).toLong, x) }
           .toDF("component", "loading")
@@ -470,7 +472,7 @@ object SimilarityQueries {
       |  FROM (SELECT unnest(range(0, 16)) AS j),
       |       (SELECT unnest(range(1, 65)) AS dim))""".stripMargin
   private def pqCodebooks(s: SparkSession, d: String): DataFrame =
-    trainedArtifact(s, d, "pq_codebooks") {
+    trainedArtifact(s, d, "pq_codebooks", version = 1) {
       // all 4 subspace codebooks train in ONE grouped Lloyd pipeline
       // (grp = subspace): one corpus pass per iteration total, instead of
       // 4 separate scan+shuffle pipelines per iteration. Bit-identical
@@ -494,7 +496,7 @@ object SimilarityQueries {
     * (session, dataset).
     */
   private def pqCodes(s: SparkSession, d: String): DataFrame =
-    trainedArtifact(s, d, "pq_codes") {
+    trainedArtifact(s, d, "pq_codes", version = 1) {
       val v = table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       val comps = v
         .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim0", "x")))
@@ -672,7 +674,7 @@ object SimilarityQueries {
     * every LSH construction here exposes.
     */
   private[graft] def nswAdjacency(s: SparkSession, d: String): DataFrame =
-    trainedArtifact(s, d, "nsw_adj") {
+    trainedArtifact(s, d, "nsw_adj", version = 1) {
       graft.functions.LshBits.register(s)
       graft.functions.VectorFunctions.register(s)
       val b = lshTableBits(s, d)
@@ -1545,9 +1547,9 @@ object SimilarityQueries {
       (s, d) => {
         import graft.operators.IvfCodebook
         val v = table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-        val sup = trainedArtifact(s, d, "imi_contract_super_v1")(
+        val sup = trainedArtifact(s, d, "imi_contract_super_v1", version = 1)(
           IvfCodebook.train(s, v, k = ImiK1, iters = 2, sampleEvery = 4))
-        val tree = trainedArtifact(s, d, "imi_contract_tree_v1")(
+        val tree = trainedArtifact(s, d, "imi_contract_tree_v1", version = 1)(
           IvfCodebook.trainChildren(s, v, sup, k2 = ImiK2, iters = 2,
             sampleEvery = 4))
         val cm = IvfCodebook.comps(v)
@@ -1579,12 +1581,12 @@ object SimilarityQueries {
       (s, d) => {
         import graft.operators.IvfCodebook
         val v = table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-        val sup = trainedArtifact(s, d, "imi3_contract_super_v1")(
+        val sup = trainedArtifact(s, d, "imi3_contract_super_v1", version = 1)(
           IvfCodebook.train(s, v, k = Imi3K1, iters = 2, sampleEvery = 4))
-        val mids = trainedArtifact(s, d, "imi3_contract_mids_v1")(
+        val mids = trainedArtifact(s, d, "imi3_contract_mids_v1", version = 1)(
           IvfCodebook.trainChildren(s, v, sup, k2 = Imi3K2, iters = 2,
             sampleEvery = 4))
-        val grand = trainedArtifact(s, d, "imi3_contract_grand_v1")(
+        val grand = trainedArtifact(s, d, "imi3_contract_grand_v1", version = 1)(
           IvfCodebook.trainGrandChildren(s, v, sup, mids, k3 = Imi3K3,
             iters = 2, sampleEvery = 4))
         val cm = IvfCodebook.comps(v)

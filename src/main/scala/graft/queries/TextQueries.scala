@@ -30,12 +30,14 @@ object TextQueries {
       graft.operators.IndexStore.digestOf(table(s, d, "documents")))
 
   /** In-JVM memo (one materialization per sweep) over the disk store (one
-    * TRAINING per fixture ever) — the trained-artifact layering the
-    * similarity set established, applied to text-trained state. */
+    * TRAINING per fixture and trainer `version` ever) — the trained-artifact
+    * layering the similarity set established, applied to text-trained
+    * state. Bump an artifact's `version` when its trainer changes. */
   private def trainedArtifact(s: org.apache.spark.sql.SparkSession,
-      d: String, tag: String)(build: => DataFrame): DataFrame =
+      d: String, tag: String, version: Int)(build: => DataFrame): DataFrame =
     cached(s, d, tag) {
-      graft.operators.IndexStore.cached(s, tag, docKey(s, d))(build)
+      graft.operators.IndexStore.cached(s, tag, docKey(s, d),
+        version = version)(build)
     }
 
   /** DuckDB replay of `text_bpe_train`: the 8 merge rounds unrolled as
@@ -385,7 +387,7 @@ object TextQueries {
       d: String): Seq[(Long, String, String, Long)] =
     mergeMemo.getOrElseUpdate((s, d), {
       import s.implicits._
-      trainedArtifact(s, d, "bpe_merges") {
+      trainedArtifact(s, d, "bpe_merges", version = 1) {
         trainBpeMerges(s, d)
           .toDF("merge_rank", "lhs", "rhs", "support")
       }.orderBy("merge_rank").as[(Long, String, String, Long)]
@@ -439,7 +441,7 @@ object TextQueries {
       d: String): Seq[(Long, Long)] =
     clfMemo.getOrElseUpdate((s, d), {
       import s.implicits._
-      trainedArtifact(s, d, "clf_weights") {
+      trainedArtifact(s, d, "clf_weights", version = 1) {
         trainClfWeights(s, d).toSeq.zipWithIndex
           .map { case (wj, j) => (j.toLong, wj) }
           .toDF("feature_id", "weight_micros")

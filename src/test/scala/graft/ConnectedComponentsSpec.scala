@@ -62,6 +62,37 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
   }
 
+  test("superseded rounds are unpersisted as the loop goes; release frees the final one") {
+    graft.queries.Q.release(spark)
+    val sc = spark.sparkContext
+    def isRound(r: org.apache.spark.rdd.RDD[_]) =
+      r.toString.contains("localCheckpoint at ConnectedComponents.scala")
+    def pinned() = sc.getPersistentRDDs.values.filter(isRound).toSeq
+    // strong references to every round seen persisted at a job start, so
+    // GC (whose cleaner unpersists unreachable RDDs) cannot hide a leak
+    val held = new java.util.concurrent.ConcurrentHashMap[Int, org.apache.spark.rdd.RDD[_]]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        pinned().foreach(r => held.put(r.id, r))
+    }
+    sc.addSparkListener(listener)
+    val (labels, rounds) =
+      try ConnectedComponents.run((0L until 63L).map(i => (i, i + 1)).toDF("u", "w"))
+      finally {
+        org.apache.spark.sql.GraftInternal.drainListenerBus(spark, 10000L)
+        sc.removeSparkListener(listener)
+      }
+    assert(rounds >= 3, s"the path needs several rounds, ran $rounds")
+    assert(held.size >= 2, s"expected several rounds seen pinned, saw ${held.size}")
+    val live = pinned()
+    assert(live.size == 1, s"only the final round may stay pinned after run: $live")
+    assert(labels.filter(col("component") =!= 0L).count() == 0 && labels.count() == 64)
+    graft.queries.Q.release(spark)
+    assert(pinned().isEmpty, s"release must free the final round: ${pinned()}")
+    held.values.forEach(r => assert(r.getStorageLevel ==
+      org.apache.spark.storage.StorageLevel.NONE, s"$r still persisted"))
+  }
+
   test("star graph converges in few rounds regardless of fan-out") {
     val star = (1L to 200L).map(i => (0L, i))
     val (lbl, rounds) = labelsOf(star)

@@ -104,6 +104,28 @@ class IndexStoreSpec extends SparkSpec {
       s"ix's own oldest key must still evict (saw $names)")
   }
 
+  test("an algorithm-version bump is a miss; the same version is a hit") {
+    import spark.implicits._
+    val root = tmpRoot()
+    var builds = 0
+    def build(tag: String) = { builds += 1; Seq((1L, tag)).toDF("id", "src") }
+    def src(df: org.apache.spark.sql.DataFrame) =
+      df.select("src").as[String].collect().toSeq
+    // same fixture key throughout: only the trainer's version changes
+    assert(src(IndexStore.cached(spark, "ix", "k", root, version = 1)(build("v1")))
+      == Seq("v1"))
+    assert(src(IndexStore.cached(spark, "ix", "k", root, version = 1)(build("again")))
+      == Seq("v1") && builds == 1, "the same version must be a disk hit")
+    assert(src(IndexStore.cached(spark, "ix", "k", root, version = 2)(build("v2")))
+      == Seq("v2") && builds == 2,
+      "a version bump must miss and retrain, not serve the old artifact")
+    assert(src(IndexStore.cached(spark, "ix", "k", root, version = 2)(build("again")))
+      == Seq("v2") && builds == 2)
+    // the unversioned key is its own entry too
+    assert(src(IndexStore.cached(spark, "ix", "k", root)(build("v0"))) == Seq("v0")
+      && builds == 3)
+  }
+
   test("round-trip is value-exact for long and double columns") {
     import spark.implicits._
     val root = tmpRoot()
