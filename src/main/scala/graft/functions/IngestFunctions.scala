@@ -84,7 +84,10 @@ object IngestFunctions {
     * quirk: a file containing a single "\n" PASSES (2 elements) — SURVEY.md
     * §2.7.2.
     */
-  def isValidCsv(lineCount: Column): Column = lineCount >= 2
+  def isValidCsv(lineCount: Column): Column = lineCount >= MinCsvLines
+
+  /** [[isValidCsv]]'s bound, for line counts already on the driver. */
+  val MinCsvLines = 2L
 
   val ValidationError = "CSV file is empty or has only headers"
 

@@ -3,9 +3,9 @@ package graft.ingest
 import graft.functions.IngestFunctions._
 import graft.ledger.LedgerStore
 import graft.model.UploadStatus
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 /** Outcome counts of one ingest pass (observability only). */
 case class IngestResult(discovered: Long, skipped: Long, done: Long,
@@ -28,7 +28,17 @@ case class IngestResult(discovered: Long, skipped: Long, done: Long,
   * The pending and processing merges defer ledger maintenance
   * ([[graft.ledger.LedgerStore.deferMaintenance]]), so a compaction they
   * make due runs after the terminal MERGE has published each file's
-  * done|failed row, not before it.
+  * done|failed row, not before it. Write order: pending publish →
+  * processing publish → DLQ append (only when something exhausted its
+  * attempts) → terminal publish → deferred sweep/compaction.
+  *
+  * Driver trips: the anti-join's survivors (the todo set) are collected
+  * ONCE per pass — metadata, plus line counts when content is present.
+  * Dedup, the zero-new fast path, fetch paths and the outcome counters
+  * are computed on the driver from that result, and each merge writes a
+  * driver-local frame (a LocalRelation), so a pass persists nothing and
+  * its Spark jobs are the head broadcast, that collect, the content fetch
+  * (batch only) and the ledger/DLQ writes.
   *
   * Scale design (the 100 TB lens):
   *  - Discovery reads the file *listing*, not file bytes: binaryFile with
@@ -40,10 +50,10 @@ case class IngestResult(discovered: Long, skipped: Long, done: Long,
   *  - The ledger side of the anti-join is small and broadcast; the event
   *    side never shuffles.
   *  - Content is fetched per todo file; per-file work is embarrassingly
-  *    parallel. The todo path list transits the driver once per pass —
-  *    bounded by new-file arrival rate (cap it with maxFilesPerTrigger in
-  *    streaming), the same magnitude as the file listing Spark's own file
-  *    source keeps on the driver.
+  *    parallel. The todo list (metadata and line counts, never content)
+  *    transits the driver once per pass — bounded by new-file arrival rate
+  *    (cap it with maxFilesPerTrigger in streaming), the same magnitude as
+  *    the file listing Spark's own file source keeps on the driver.
   *
   * Semantics preserved from the reference (SURVEY.md §2.6-2.7):
   *  - idempotency is keyed on metadata identity, not content (main.py:15-18);
@@ -93,15 +103,21 @@ class IngestPipeline(
     *
     * `events` must carry path/bucket_name/file_name/file_size/created_iso;
     * a `content` column is optional — when present (the streaming wholetext
-    * path, which already paid the read) it is used directly, otherwise
-    * content is fetched only for the files that survive the idempotency
-    * anti-join.
+    * path, which already paid the read) its line counts are taken on the
+    * executors, otherwise content is fetched only for the files that
+    * survive the idempotency anti-join.
+    *
+    * The todo set crosses to the driver once: one collect of its metadata
+    * (and line counts, when content is present). Everything after it —
+    * within-batch dedup, the zero-new fast path, fetch paths, outcome
+    * counters — is driver code, and each merge writes a driver-local
+    * frame, so a pass persists nothing and runs no count of its own.
     */
   def processEvents(events0: DataFrame): IngestResult = {
     val ts = now()
-    // the discovered count rides the todo materialization job as an
-    // Observation metric (CollectMetrics sees every event row before the
-    // extension filter) instead of a separate count() job per pass
+    // the discovered count rides the todo collect as an Observation metric
+    // (CollectMetrics sees every event row before the extension filter)
+    // instead of a separate count() job per pass
     val eventsObs = org.apache.spark.sql.Observation()
     val events = events0.observe(eventsObs, count(lit(1)).as("n"))
     val streamedContent = events.columns.contains("content")
@@ -163,28 +179,36 @@ class IngestPipeline(
         UploadStatus.Failed && col("attempts") >= maxAttempts)).as("blocked"),
       coalesce(col("attempts"), lit(0)).as("prior_attempts"))
 
+    // The pass's one driver trip: each todo row's metadata and, where
+    // content is present, its line count (counted on the executors; the
+    // bytes never cross). The same job fires the events Observation above,
+    // which yields `discovered`.
+    val lineCount =
+      if (hasContent)
+        Seq(pySplitLineCount(coalesce(col("content"), lit(""))).cast("long"))
+      else Nil
     val todo = csvEvents
       .join(broadcast(ledger), Seq("upload_id"), "left")
-      .filter(!coalesce(col("blocked"), lit(false))).drop("blocked")
+      .filter(!coalesce(col("blocked"), lit(false)))
+      .select(Seq(col("upload_id"), col("path"), col("bucket_name"),
+        col("file_name"), col("file_size").cast("long"),
+        coalesce(col("prior_attempts"), lit(0))) ++ lineCount: _*)
+      .collect()
+      .map(r => Todo(r.getString(0), r.getString(1), r.getString(2),
+        r.getString(3), r.getLong(4), r.getInt(5),
+        if (hasContent) Some(r.getLong(6)) else None))
       // Within-batch dedup: two events for the same object in one batch
       // collapse to one (the reference's TOCTOU race, fixed — ST5).
-      .dropDuplicates("upload_id")
-      .na.fill(0, Seq("prior_attempts"))
-      .persist() // metadata-only rows (or +content in streaming) — small
-
-    // Listing-priced counts: content is never projected here. ONE job —
-    // todo.count() materializes the persist and fires the events
-    // Observation above, which yields `discovered` for free.
-    val todoN = todo.count()
+      .distinctBy(_.uploadId)
     val discovered = eventsObs.get("n").asInstanceOf[Long]
 
     // Steady-state fast path: nothing new → zero ledger writes, zero
     // content reads. A scheduled re-run over an all-ingested inbox costs
     // one metadata listing and nothing else.
-    if (todoN == 0) {
-      todo.unpersist()
-      return IngestResult(discovered, discovered, 0, 0, 0)
-    }
+    if (todo.isEmpty) return IngestResult(discovered, discovered, 0, 0, 0)
+
+    val todoFrame = local(TodoSchema, todo.toSeq.map(t =>
+      Row(t.uploadId, t.bucketName, t.fileName, t.fileSize)))
 
     // Ledger maintenance (retention sweep, compaction) made due by the
     // pending and processing merges waits for the terminal merge below,
@@ -193,7 +217,7 @@ class IngestPipeline(
       // A1 — observable `pending` upsert BEFORE any processing, exactly
       // the reference's write order (main.py:61-68). A crash after this
       // merge leaves real pending rows a status query can see.
-      store.merge(todo.select(
+      store.merge(todoFrame.select(
         col("upload_id"), col("bucket_name"), col("file_name"),
         col("file_size"), lit(UploadStatus.Pending).as("status"),
         ts.as("queued_at")))
@@ -203,14 +227,15 @@ class IngestPipeline(
       // them). Full 4-state machine pending → processing → done|failed is
       // now externally visible between merges, matching the reference's
       // ledger.
-      store.merge(todo.select(
+      store.merge(todoFrame.select(
         col("upload_id"), lit(UploadStatus.Processing).as("status"),
         ts.as("processing_started_at")),
         requireExisting = true)
     }
 
-    // S3 + A-L1 + F5 — content read for todo files only (scale: O(new), not
-    // O(inbox)), line-counted (split-fencepost) and validated. Two read
+    // S3 + A-L1 + F5 — line counts for the todo files (already collected
+    // when content is present; otherwise one fetch of the todo files only —
+    // scale: O(new), not O(inbox)), keyed by normalized path. Two read
     // paths by size (SURVEY §7.3): small files as one whole-file string
     // (reference-faithful, single task); files over `wholeFileMaxBytes` via
     // the SPLITTABLE text source — a 50 GB CSV counts as parallel
@@ -218,110 +243,106 @@ class IngestPipeline(
     // split('\n') fencepost is restored from the per-file row count plus a
     // last-byte probe (N trailing-newline files have rows == newlines; the
     // rest have rows == newlines + 1).
-    val judged = {
-      if (hasContent)
-        todo
-          .withColumn("n_lines", pySplitLineCount(coalesce(col("content"), lit(""))))
-          .withColumn("ok", isValidCsv(col("n_lines")))
+    val fetchedCounts: Map[String, Long] =
+      if (hasContent) Map.empty
       else {
-        import spark.implicits._
-        val normalize = (p: Column) => regexp_replace(p, "^file:/+", "file:/")
         // Re-check existence at fetch time: a file deleted between listing
         // and read must degrade to THAT upload failing, not abort the pass
         // (load() on an explicit path list throws at resolution otherwise;
         // ignoreMissingFiles below covers the remaining read-time window).
-        // ONE collect over the persisted todo rows (bounded per pass),
-        // partitioned by size driver-side — was two jobs.
-        val (bigAll, smallAll) = todo.select(col("path"), col("file_size"))
-          .as[(String, Long)].collect()
-          .partition(_._2 > wholeFileMaxBytes)
-        val smallPaths = smallAll.map(_._1).filter(fileExists)
-        val bigPaths = bigAll.map(_._1).filter(fileExists) // few, large
-
-        val emptyCounts = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("jpath", StringType),
-            StructField("n_lines", org.apache.spark.sql.types.LongType))))
+        val (bigAll, smallAll) = todo.partition(_.fileSize > wholeFileMaxBytes)
+        val smallPaths = smallAll.map(_.path).filter(fileExists)
+        val bigPaths = bigAll.map(_.path).filter(fileExists) // few, large
 
         val smallCounts =
-          if (smallPaths.isEmpty) emptyCounts
+          if (smallPaths.isEmpty) Map.empty[String, Long]
           else spark.read.format("binaryFile")
             .option("ignoreMissingFiles", "true")
             .load(smallPaths: _*)
-            .select(normalize(col("path")).as("jpath"),
-              pySplitLineCount(decode(col("content"), "UTF-8")).cast("long")
-                .as("n_lines"))
+            .select(col("path"),
+              pySplitLineCount(decode(col("content"), "UTF-8")).cast("long"))
+            .collect().map(r => normalize(r.getString(0)) -> r.getLong(1)).toMap
 
         val bigCounts =
-          if (bigPaths.isEmpty) emptyCounts
+          if (bigPaths.isEmpty) Map.empty[String, Long]
           else {
             val rowsPerFile = spark.read.option("lineSep", "\n")
               .option("ignoreMissingFiles", "true")
               .textFile(bigPaths: _*)
-              .select(normalize(input_file_name()).as("jpath"))
-              .groupBy("jpath").agg(count(lit(1)).as("t_rows"))
-            val tails = bigPaths.toSeq
-              .map(p => (p, lastByteIsNewline(p))).toDF("bpath", "ends_nl")
-              .select(normalize(col("bpath")).as("jpath"), col("ends_nl"))
-            tails.join(rowsPerFile, Seq("jpath"), "left")
-              .select(col("jpath"),
-                when(col("ends_nl"), coalesce(col("t_rows"), lit(0L)) + 1)
-                  .otherwise(greatest(coalesce(col("t_rows"), lit(0L)), lit(1L)))
-                  .as("n_lines"))
+              .groupBy(input_file_name()).count()
+              .collect().map(r => normalize(r.getString(0)) -> r.getLong(1)).toMap
+            bigPaths.map { p =>
+              val rows = rowsPerFile.getOrElse(normalize(p), 0L)
+              normalize(p) ->
+                (if (lastByteIsNewline(p)) rows + 1 else math.max(rows, 1L))
+            }.toMap
           }
-
-        // left join: a file deleted between listing and read counts as
-        // empty → failed, mirroring the reference's download error path.
-        todo.withColumn("jpath", normalize(col("path")))
-          .join(smallCounts.unionByName(bigCounts), Seq("jpath"), "left")
-          .na.fill(1L, Seq("n_lines"))
-          .withColumn("ok", isValidCsv(col("n_lines")))
+        smallCounts ++ bigCounts
       }
-    }
 
-    // A2..A4 — each upload's terminal row for this pass, written with
-    // must-exist semantics (the rows exist: the pending merge above wrote
-    // them — and an unknown-ID row would vanish, matching main.py:110-113's
-    // failing update()).
-    val updates = judged.select(
+    // A2..A4 — each upload's terminal row for this pass, judged on the
+    // driver. A file deleted between listing and read counts as empty →
+    // failed, mirroring the reference's download error path.
+    val (done, failed) = todo.map(t => t -> t.nLines.getOrElse(
+        fetchedCounts.getOrElse(normalize(t.path), 1L)))
+      .partition(_._2 >= MinCsvLines)
+    val quarantinedN = failed.count(_._1.priorAttempts + 1 >= maxAttempts)
+    // Written with must-exist semantics (the rows exist: the pending merge
+    // above wrote them — and an unknown-ID row would vanish, matching
+    // main.py:110-113's failing update()). The terminal timestamp is taken
+    // once, now that the line counts are known (a local plan, no job), so
+    // a quarantined row and its ledger row carry the same failed_at.
+    val judgedAt = lit(todoFrame.select(ts).head().get(0))
+    val ok = col("status") === UploadStatus.Done
+    val updates = local(TerminalSchema, (done.map { case (t, n) =>
+        Row(t.uploadId, t.bucketName, t.fileName, t.fileSize,
+          UploadStatus.Done, n, null)
+      } ++ failed.map { case (t, _) =>
+        Row(t.uploadId, t.bucketName, t.fileName, t.fileSize,
+          UploadStatus.Failed, null, t.priorAttempts + 1)
+      }).toSeq).select(
       col("upload_id"), col("bucket_name"), col("file_name"), col("file_size"),
-      when(col("ok"), UploadStatus.Done).otherwise(UploadStatus.Failed).as("status"),
-      when(col("ok"), ts).as("processing_completed_at"),
-      when(!col("ok"), ts).as("failed_at"),
-      when(!col("ok"), ValidationError).as("error_message"),
-      when(col("ok"), col("n_lines").cast("long")).as("lines_processed"),
-      when(!col("ok"), col("prior_attempts") + 1)
-        .otherwise(lit(null)).cast("int").as("attempts"))
-      .persist()
+      col("status"),
+      when(ok, judgedAt).as("processing_completed_at"),
+      when(!ok, judgedAt).as("failed_at"),
+      when(!ok, ValidationError).as("error_message"),
+      col("lines_processed"), col("attempts"))
 
-    // One aggregation for ALL outcome counters — done/failed/quarantined
-    // in a single job (was a groupBy-collect plus a separate quarantine
-    // count).
-    val counters = updates.agg(
-      count(when(col("status") === UploadStatus.Done, 1)).as("done"),
-      count(when(col("status") === UploadStatus.Failed, 1)).as("failed"),
-      count(when(col("status") === UploadStatus.Failed &&
-        col("attempts") >= maxAttempts, 1)).as("quarantined"))
-      .collect().head
-    val doneN = counters.getLong(0)
-    val failedN = counters.getLong(1)
-    val quarantinedN = counters.getLong(2)
-
-    // S7 — quarantine (DLQ): failures that just exhausted their attempts.
-    val quarantined = updates
-      .filter(col("status") === UploadStatus.Failed && col("attempts") >= maxAttempts)
+    // S7 — quarantine (DLQ): failures that just exhausted their attempts,
+    // appended before the terminal publish.
     if (quarantinedN > 0)
-      quarantined.withColumn("quarantined_at", ts)
+      updates.filter(!ok && col("attempts") >= maxAttempts)
+        .withColumn("quarantined_at", ts)
         .write.mode("append").parquet(quarantineDir)
 
     // S6 — the terminal idempotent MERGE (must-exist); it publishes, then
     // runs the maintenance the two merges above deferred.
     store.merge(updates, requireExisting = true)
 
-    updates.unpersist(); todo.unpersist()
-    IngestResult(discovered, discovered - doneN - failedN, doneN, failedN,
-      quarantinedN)
+    IngestResult(discovered, discovered - todo.length, done.length,
+      failed.length, quarantinedN)
   }
+
+  /** One collected todo row; `nLines` is set when content was present. */
+  private case class Todo(uploadId: String, path: String, bucketName: String,
+      fileName: String, fileSize: Long, priorAttempts: Int,
+      nLines: Option[Long])
+
+  private val TodoSchema = StructType(Seq(
+    StructField("upload_id", StringType), StructField("bucket_name", StringType),
+    StructField("file_name", StringType), StructField("file_size", LongType)))
+
+  private val TerminalSchema = StructType(TodoSchema.fields ++ Seq(
+    StructField("status", StringType), StructField("lines_processed", LongType),
+    StructField("attempts", IntegerType)))
+
+  /** `rows` as a driver-local frame (a LocalRelation): writing it ships the
+    * rows, with no upstream job. */
+  private def local(schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** The fetch paths and the todo paths meet in one spelling. */
+  private def normalize(p: String): String = p.replaceFirst("^file:/+", "file:/")
 
   /** Ops hook: re-admit quarantined uploads — the engine's version of the
     * reference's manual DLQ drain (test:1-2). Resets the attempts counter

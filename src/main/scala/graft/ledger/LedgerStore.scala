@@ -89,9 +89,11 @@ import java.util.UUID
   * passes), and every later chain is persisted on its first read; lookups
   * then filter the cached head. A new chain unpersists the head it
   * supersedes, and `Q.release` (via [[LedgerStore.release]]) frees them
-  * all. A query still in flight on a head that was unpersisted under it
-  * recomputes that head from its generation dirs, which the sweep's grace
-  * window keeps on disk. [[readAt]] is never cached.
+  * all. Compaction in that persisting mode resolves its chain through the
+  * same cache and never unpersists it. A query still in flight on a head
+  * that was unpersisted under it recomputes that head from its generation
+  * dirs, which the sweep's grace window keeps on disk. [[readAt]] is
+  * never cached.
   */
 class LedgerStore(spark: SparkSession, dir: String,
     compactEvery: Int = 8) {
@@ -451,13 +453,23 @@ class LedgerStore(spark: SparkSession, dir: String,
       // delta published in between be silently buried under a base that
       // does not contain it (a lost update, found by LedgerCasSpec's
       // merge-storm test).
-      val merged = readChain(ch).persist()
+      //
+      // Once the ledger's chains are read again (see the class doc), the
+      // head cache resolves the chain and owns that resolution: a status
+      // reader asking for the same chain meanwhile is handed the same
+      // cached plan (Spark caches by plan), so unpersisting it here would
+      // drop the reader's head. Otherwise no reader comes back, and the
+      // compaction holds its own resolution only while it writes.
+      val shared = LedgerStore.rereads(spark, qualifiedRoot)
+      val merged =
+        if (shared) LedgerStore.head(spark, qualifiedRoot, ch)(readChain(ch))
+        else readChain(ch).persist()
       try {
         val rows = merged.count() // materialize BEFORE touching pointers
         try commitSnapshot(merged, rows,
           ch.lastOption.map(l => (l.seq, l.dirName)))
         catch { case _: ConcurrentLedgerWriteException => () }
-      } finally merged.unpersist()
+      } finally if (!shared) merged.unpersist()
     }
   }
 
@@ -670,6 +682,11 @@ object LedgerStore {
     if (drop != null) drop.unpersist(blocking = false)
     fresh
   }
+
+  /** Whether some chain of the ledger at `path` has been read twice, so
+    * [[head]] persists each chain and owns its resolution. */
+  private def rereads(spark: SparkSession, path: String): Boolean =
+    Option(heads.get((spark, path))).exists(h => h.synchronized(h.reread))
 
   /** Unpersist and forget every ledger head cached for `spark` (the
     * session's release path, `Q.release`, calls this between query sets

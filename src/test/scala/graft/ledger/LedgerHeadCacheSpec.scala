@@ -181,4 +181,31 @@ class LedgerHeadCacheSpec extends SparkSpec {
     // released, not poisoned: the next reads resolve again
     assert(store.read().count() == 7 && store.read().count() == 7)
   }
+
+  test("a compaction keeps the head a status reader resolved during it") {
+    // Once the ledger is re-read, every chain is persisted on its first
+    // read. A reader that resolves the chain being compacted while the
+    // compaction writes its snapshot shares the compaction's resolution
+    // (Spark caches by plan), so the compaction must not unpersist it.
+    graft.CrashFs.install(spark)
+    val local = tmpDir("head-compact")
+    val store = new LedgerStore(spark, graft.CrashFs.path(local), compactEvery = 3)
+    val reader = new LedgerStore(spark, graft.CrashFs.path(local), compactEvery = 3)
+    store.merge(rows(UploadStatus.Pending, "u1"))
+    reader.read(); reader.read()
+    store.merge(rows(UploadStatus.Pending, "u2"))
+    var seen: DataFrame = null
+    // the compaction's first write into its snapshot dir: a status read
+    val w = graft.CrashFs.watch(local) { (_, _, path) =>
+      if (seen == null && path.contains("/v-")) seen = reader.read()
+    }
+    try store.merge(rows(UploadStatus.Pending, "u3")) // third delta: compaction
+    finally w.close()
+    assert(seen != null, "the merge did not compact")
+    assert(seen.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "the compaction unpersisted the head a reader holds")
+    assert(servedFromCache(seen))
+    assert(state(seen.select("upload_id", "status")) ==
+      Set("u1", "u2", "u3").map(Row(_, UploadStatus.Pending)))
+  }
 }
