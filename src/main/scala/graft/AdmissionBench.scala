@@ -119,11 +119,8 @@ object AdmissionBench {
             math.max(16, math.ceil(math.sqrt(nVec.toDouble)).toInt))
           // past FlatKMax the build is the two-level IMI tree — flat
           // Lloyd is O(n·k)/iteration, the wrong complexity class at
-          // k = √n scale (SPARK_GRAFT_FLATKMAX overrides for the
-          // flat-vs-tree build A/B; huge value = force flat)
-          val flatKMax = sys.env.get("SPARK_GRAFT_FLATKMAX")
-            .map(_.trim.toInt)
-            .getOrElse(graft.streaming.SemanticAdmitter.FlatKMax)
+          // k = √n scale
+          val flatKMax = graft.streaming.SemanticAdmitter.FlatKMax
           System.err.println(s"[admission] semantic quantizer k=$k " +
             s"($nVec vectors, ${if (k > flatKMax) "tree" else "flat"})")
           val t0 = System.nanoTime()
@@ -131,7 +128,7 @@ object AdmissionBench {
           // centroids), so this wall IS the offline build cost — the
           // number the flat-vs-tree A/B compares
           val cb = graft.streaming.SemanticAdmitter.trainCoarse(spark, v,
-            k = k, iters = 2, sampleEvery = 4, flatKMax = flatKMax)
+            k = k, iters = 2, sampleEvery = 4)
           System.err.println(f"[admission] quantizer build " +
             f"${(System.nanoTime() - t0) / 1e9}%.1fs")
           // SPARK_GRAFT_BUILD_ONLY=1: stop after the build wall prints.
@@ -199,10 +196,7 @@ object AdmissionBench {
       val admitter =
         if (mode == "refresh")
           Some(new graft.streaming.SemanticAdmitter(spark, s"$work/sem",
-            simThreshold = 0.4, kCap = kCap, stalenessBound = staleness,
-            flatKMax = sys.env.get("SPARK_GRAFT_FLATKMAX")
-              .map(_.trim.toInt)
-              .getOrElse(graft.streaming.SemanticAdmitter.FlatKMax)))
+            simThreshold = 0.4, kCap = kCap, stalenessBound = staleness))
         else None
       val swaps = scala.collection.mutable.ArrayBuffer
         .empty[(Int, graft.streaming.SemanticAdmitter.RefreshInfo)]

@@ -78,18 +78,12 @@ object Bench {
     // cost measurement that must exist before any real-cluster number is
     // quoted. Same classpath/JDK-17-opens forwarding as Verify's smoke.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    // SPARK_GRAFT_AQE: builder-side experiment lever (like
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS) — "0"/"false" disables adaptive
-    // execution for an A/B sweep; unset keeps adaptive on.
-    val aqe = sys.env.get("SPARK_GRAFT_AQE")
-      .map(v => (!(v == "0" || v.equalsIgnoreCase("false"))).toString)
-      .getOrElse("true")
     val builder0 = GraftSession.tuned(SparkSession.builder())
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", aqe)
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
     val builder =
       if (master.startsWith("local-cluster"))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Engine-wide SparkSession tuning shared by every entry point (Bench,
-  * Verify, AdmissionBench, CorpusBuild, CcBench, the test harness) so a
+  * Verify, AdmissionBench, CorpusBuild, the test harness) so a
   * cluster-shaped default cannot silently apply to one main and not
   * another.
   *
@@ -16,13 +16,12 @@ import org.apache.spark.sql.SparkSession
   *    tighter than the lz4 default at negligible CPU cost for
   *    shuffle-bound stages. At cluster scale the same dial is what keeps
   *    executor local disks inside their provisioned headroom.
-  *    `SPARK_GRAFT_IO_CODEC` overrides (the lz4-vs-zstd A/B lever).
   *  - **checkpoint file GC**: reliable-checkpoint files (the memo
   *    lineage-truncation path in [[graft.queries.Q.cached]]) are deleted
   *    when their RDD is collected, not held until application end.
   */
 object GraftSession {
-  def ioCodec: String = sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "zstd")
+  val ioCodec = "zstd"
 
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.io.compression.codec", ioCodec)

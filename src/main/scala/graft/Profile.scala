@@ -48,10 +48,7 @@ object Profile {
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.get("SPARK_GRAFT_AQE")
-          .map(v => (!(v == "0" || v.equalsIgnoreCase("false"))).toString)
-          .getOrElse("true"))
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

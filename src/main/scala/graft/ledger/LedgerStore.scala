@@ -243,8 +243,21 @@ class LedgerStore(spark: SparkSession, dir: String,
     * and generation dirs below the live base); beyond that the read
     * throws rather than resolving a truncated state. Generation numbers
     * come from [[currentPointer]] after a merge.
+    *
+    * The sweep keeps more pointers than generation dirs below the live
+    * base, so a listed pointer can name a dir that is gone: checked here
+    * (one `exists` per link) rather than in [[chainAt]], which `read()`
+    * and `merge` walk on every call.
     */
-  def readAt(asOf: Long): DataFrame = readChain(chainAt(asOf))
+  def readAt(asOf: Long): DataFrame = {
+    val ch = chainAt(asOf)
+    ch.find(l => !fs.exists(new Path(rootPath, l.dirName))).foreach { l =>
+      throw new IllegalStateException(
+        s"ledger generation ${l.seq} (${l.dirName}), needed to read as of " +
+          s"$asOf, was compacted/retained away under $rootPath")
+    }
+    readChain(ch)
+  }
 
   /** The retained generation log, ascending: (seq, kind, dir_name) — kind
     * is `base`, `delta` or `delta-must-exist`. The [[readAt]] argument

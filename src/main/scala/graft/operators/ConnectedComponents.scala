@@ -56,75 +56,53 @@ object ConnectedComponents {
     *         connected component; rounds = propagation rounds executed
     *         (tests assert the O(log diameter) bound holds)
     */
-  /** In-memory unsafe-row bytes per propagated edge/label row (two longs
-    * + row overhead), used to size the per-loop shuffle width below. */
-  private val BytesPerEdgeRow = 64L
-
   def run(pairs: DataFrame, maxRounds: Int = 16): (DataFrame, Int) = {
     val spark = pairs.sparkSession
     val e = pairs.toDF("u", "w")
     val edges = e.union(e.select(col("w"), col("u")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // Loop shuffle width: the session default, deliberately. The loop's
+    // The loop runs at the session shuffle width, deliberately. Its
     // per-round exchanges carry O(|E|) rows of two longs — tiny next to
     // the corpus-derived session width at scaled fixtures — but a
-    // same-window interleaved A/B at x300 (77 k pairs, graft.CcBench,
-    // SCALING.md §11) measured AQE's partition coalescing already
-    // engaging INSIDE the loop (localCheckpoint does not block it):
-    // session-width median 3.0 s vs a derived-width override's 3.7 s,
-    // where the override's own edge-count sizing job cost more than the
-    // narrower width saved. The earlier cross-window comparison that
-    // motivated an override (round-12: 8.6 s @32 vs 13.4 s @544) was
-    // host-window noise — the two windows differed 1.8× on
-    // byte-identical plans. SPARK_GRAFT_CC_LOOP_WIDTH remains the
-    // experiment lever: an int pins the loop width, "derived" re-enables
-    // the edges-count derivation; the session conf is restored after the
-    // loop (run() is called from single-threaded query bodies).
-    val sessionWidth = spark.conf.get("spark.sql.shuffle.partitions")
-    val loopWidth = sys.env.get("SPARK_GRAFT_CC_LOOP_WIDTH") match {
-      case Some("derived") => math.min(sessionWidth.toInt,
-        Autoscale.shufflePartitions(
-          edges.count() * BytesPerEdgeRow,
-          spark.sparkContext.defaultParallelism))
-      case Some(v) if v != "session" => v.trim.toInt
-      case _ => sessionWidth.toInt
-    }
-    spark.conf.set("spark.sql.shuffle.partitions", loopWidth.toString)
-    try {
-      // lazy checkpoints: the per-round checksum action materializes them,
-      // so each round runs ONE job instead of checkpoint + checksum
-      var labels = edges.select(col("u").as("v")).distinct()
-        .withColumn("component", col("v"))
-        .localCheckpoint(false)
-      def checksum(df: DataFrame): Long =
-        df.agg(coalesce(sum("component"), lit(0L))).head.getLong(0)
-      var prev = checksum(labels)
-      var rounds = 0
-      var converged = labels.head(1).isEmpty
-      while (!converged && rounds < maxRounds) {
-        val viaNbr = edges.join(labels.withColumnRenamed("v", "w"), "w")
-          .select(col("u").as("v"), col("component"))
-        val merged = labels.union(viaNbr)
-          .groupBy("v").agg(min("component").as("component"))
-        val jumped = merged
-          .join(merged.select(col("v").as("component"),
-            col("component").as("c2")), "component")
-          .select(col("v"), col("c2").as("component"))
-          .localCheckpoint(false) // truncate: see scaladoc (iterative plan)
-        val cur = checksum(jumped)
-        // jumped is materialized: the round it supersedes is read no more
-        GraftInternal.checkpointedRdd(labels)
-          .foreach(_.unpersist(blocking = false))
-        labels = jumped
-        rounds += 1
-        converged = cur == prev
-        prev = cur
-      }
-      edges.unpersist()
+    // same-window interleaved A/B at x300 (77 k pairs, SCALING.md §11)
+    // measured AQE's partition coalescing already engaging INSIDE the
+    // loop (localCheckpoint does not block it): session-width median
+    // 3.0 s vs a derived-width override's 3.7 s, where the override's own
+    // edge-count sizing job cost more than the narrower width saved.
+    //
+    // lazy checkpoints: the per-round checksum action materializes them,
+    // so each round runs ONE job instead of checkpoint + checksum
+    var labels = edges.select(col("u").as("v")).distinct()
+      .withColumn("component", col("v"))
+      .localCheckpoint(false)
+    def checksum(df: DataFrame): Long =
+      df.agg(coalesce(sum("component"), lit(0L))).head.getLong(0)
+    var prev = checksum(labels)
+    var rounds = 0
+    var converged = labels.head(1).isEmpty
+    while (!converged && rounds < maxRounds) {
+      val viaNbr = edges.join(labels.withColumnRenamed("v", "w"), "w")
+        .select(col("u").as("v"), col("component"))
+      val merged = labels.union(viaNbr)
+        .groupBy("v").agg(min("component").as("component"))
+      val jumped = merged
+        .join(merged.select(col("v").as("component"),
+          col("component").as("c2")), "component")
+        .select(col("v"), col("c2").as("component"))
+        .localCheckpoint(false) // truncate: see scaladoc (iterative plan)
+      val cur = checksum(jumped)
+      // jumped is materialized: the round it supersedes is read no more
       GraftInternal.checkpointedRdd(labels)
-        .foreach(r => finals.put((spark, r.id), ()))
-      (labels, rounds)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", sessionWidth)
+        .foreach(_.unpersist(blocking = false))
+      labels = jumped
+      rounds += 1
+      converged = cur == prev
+      prev = cur
+    }
+    edges.unpersist()
+    GraftInternal.checkpointedRdd(labels)
+      .foreach(r => finals.put((spark, r.id), ()))
+    (labels, rounds)
   }
 
   /** (session, RDD id) of each run's final-round checkpoint. Ids rather

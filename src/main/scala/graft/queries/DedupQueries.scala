@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.operators.BandedJoin
 import org.apache.spark.sql.functions._
 
 /** LLM-training-data deduplication over `documents` — the content-identity
@@ -125,6 +126,27 @@ object DedupQueries {
     """dial AS MATERIALIZED (SELECT least(16, length(bin(
       |  greatest(256, (SELECT count(*) FROM documents) // 20) - 1))) AS bw)""".stripMargin
 
+  /** DuckDB rendering of [[simhashSigs]] and the first table of
+    * [[simhashBands]]: a CTE list (no `WITH`) ending in
+    * `sh(doc_id, simhash)` and `bands(doc_id, band, bv)`.
+    */
+  private val SimhashBandsSql: String =
+    s"""$SimhashDialSql,
+      |w AS MATERIALIZED (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
+      |h AS MATERIALIZED (SELECT doc_id, substr(sha256(w), 1, (SELECT bw FROM dial)) AS hx FROM w WHERE len(w) > 0),
+      |e AS (SELECT doc_id, hx, unnest(range(0, 4 * (SELECT bw FROM dial))) AS b FROM h),
+      |v AS (SELECT doc_id, b,
+      |  ((instr('$Hex', substr(hx, (b // 4) + 1, 1)) - 1) >> (3 - (b % 4))) & 1 AS bit
+      |  FROM e),
+      |votes AS MATERIALIZED (SELECT doc_id, b, CAST(sum(2 * bit - 1) AS BIGINT) AS vote
+      |  FROM v GROUP BY 1, 2),
+      |sh AS MATERIALIZED (SELECT doc_id,
+      |  CAST(sum((CASE WHEN vote > 0 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END) << b) AS BIGINT) AS simhash
+      |  FROM votes GROUP BY doc_id),
+      |bands AS MATERIALIZED (SELECT doc_id, b AS band,
+      |  (simhash >> (b * (SELECT bw FROM dial))) & ((CAST(1 AS BIGINT) << (SELECT bw FROM dial)) - 1) AS bv
+      |  FROM sh, (SELECT unnest(range(0, 4)) AS b))""".stripMargin
+
   /** SimHash signature of `hexDigits * 4` bits per document: each word
     * votes its sha256-prefix bits ±1 per position; the signature's bit b is
     * 1 iff the vote is positive. Computed by the native fused
@@ -155,27 +177,48 @@ object DedupQueries {
     * word hashes, so a constant FRACTION of the corpus can share one
     * band value no matter how wide the bands get (the x30 measured
     * sweep: 9.7x growth on 3x data with width-widening alone). Buckets
-    * at or below SimhashBandCap enumerate all pairs; hotter buckets
-    * STAR-LINK through the bucket's min-doc representative (O(bucket)
-    * pairs), so a duplicate group larger than the cap stays reachable
-    * while boilerplate buckets stay linear; the hamming verify gates
-    * every emitted pair. Mirrored in the DuckDB oracle. Tables beyond
-    * the first draw their 4 bands from successive 64-bit sha256 blocks
-    * (`simhash_bits_block`) — candidate generation only; the verify
-    * signature never changes, so extra tables are purely additive
-    * recall.
+    * above SimhashBandCap star-link (see [[graft.operators.BandedJoin]]);
+    * the hamming verify gates every emitted pair. Mirrored in the DuckDB
+    * oracle.
     */
   private[graft] def simhashPairs(s: org.apache.spark.sql.SparkSession,
       d: String, nTables: Int): org.apache.spark.sql.DataFrame = {
+    val sh = simhashSigs(s, d)
+    BandedJoin.pairs(simhashBands(s, d, nTables), "doc_id",
+        Seq("band", "bv"), SimhashBandCap)
+      .join(sh.select(col("doc_id").as("doc_a"),
+        col("simhash").as("sim_a")), "doc_a")
+      .join(sh.select(col("doc_id").as("doc_b"),
+        col("simhash").as("sim_b")), "doc_b")
+      .withColumn("hamming",
+        expr("bit_count(sim_a ^ sim_b)").cast("long"))
+      .filter(col("hamming") <= 3)
+      .select("doc_a", "doc_b", "hamming")
+  }
+
+  /** The banded pair search's signatures: one `simhashBandBits`-wide
+    * signature row per doc, persisted once for the band table and both
+    * verify joins (the tag names the width: same dataset ⇒ same width, but
+    * the name should say what the cache holds).
+    */
+  private def simhashSigs(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
+    val w = simhashBandBits(s, d)
+    cached(s, d, s"simhash_4x$w")(simhashBits(s, d, hexDigits = w))
+  }
+
+  /** The simhash band table (doc_id, band, bv), shared by the pair search
+    * and the occupancy histogram: 4 bands of the persisted signature, and
+    * for each table beyond the first 4 more from successive 64-bit sha256
+    * blocks (`simhash_bits_block`) — candidate generation only; the verify
+    * signature never changes, so extra tables are purely additive recall.
+    */
+  private def simhashBands(s: org.apache.spark.sql.SparkSession,
+      d: String, nTables: Int): org.apache.spark.sql.DataFrame = {
     val w = simhashBandBits(s, d)
     graft.functions.SimhashBits.register(s)
-    // one 4-band-row-per-doc pipeline feeds both join sides — persist
-    // once (the tag names the width: same dataset ⇒ same width, but
-    // the name should say what the cache holds)
-    val sh = cached(s, d, s"simhash_4x$w")(
-      simhashBits(s, d, hexDigits = w))
     val mask = (1 << w) - 1
-    val bands0 = sh.select(col("doc_id"),
+    val bands0 = simhashSigs(s, d).select(col("doc_id"),
         explode(sequence(lit(0), lit(3))).as("b"), col("simhash"))
       .withColumn("bv", expr(s"(simhash >> (b * $w)) & $mask"))
       .select(col("doc_id"), col("b").as("band"), col("bv"))
@@ -188,43 +231,7 @@ object DedupQueries {
         .withColumn("bv", expr(s"(sig >> (b * $w)) & $mask"))
         .select(col("doc_id"), (col("b") + lit(4 * t)).as("band"), col("bv"))
     }
-    val bands = extraBands.foldLeft(bands0)(_ unionByName _)
-    val stats = bands.groupBy("band", "bv")
-      .agg(count(lit(1)).as("n_b"), min(col("doc_id")).as("rep"))
-    // cool-bucket membership as an ANTI-join against the HOT keys: cool
-    // (= every bucket at or below the cap) grows with the corpus, so a
-    // semi-join against it degrades to shuffling the full band set at
-    // scale, while the hot side is bounded by corpus/cap and ALREADY
-    // broadcast for the star-link below — bands ∉ hot ≡ bands ∈ cool
-    // (stats covers every (band, bv) present in bands), zero exchange on
-    // the bands side at any corpus size. The anti build side is the SAME
-    // broadcast(hot) subtree the star-link uses — identical canonical
-    // plans, so ReuseExchange builds the hot broadcast (and its stats
-    // aggregation over the persisted bands) exactly once; the extra rep
-    // column on the build side is unused by an anti-join.
-    val hot = stats.filter(col("n_b") > SimhashBandCap)
-      .select(col("band"), col("bv"), col("rep"))
-    val ok = bands.join(broadcast(hot), Seq("band", "bv"), "left_anti")
-    val pairwise = ok.select(col("doc_id").as("doc_a"), col("band"), col("bv"))
-      .join(ok.select(col("doc_id").as("doc_b"),
-        col("band").as("band_b"), col("bv").as("bv_b")),
-        col("band") === col("band_b") && col("bv") === col("bv_b") &&
-          col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-    // hot buckets are few (> cap docs each) — broadcast the (band, bv,
-    // rep) side
-    val star = bands.join(broadcast(hot), Seq("band", "bv"))
-      .filter(col("doc_id") =!= col("rep"))
-      .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
-    pairwise.unionByName(star).distinct()
-      .join(sh.select(col("doc_id").as("doc_a"),
-        col("simhash").as("sim_a")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"),
-        col("simhash").as("sim_b")), "doc_b")
-      .withColumn("hamming",
-        expr("bit_count(sim_a ^ sim_b)").cast("long"))
-      .filter(col("hamming") <= 3)
-      .select("doc_a", "doc_b", "hamming")
+    extraBands.foldLeft(bands0)(_ unionByName _)
   }
 
   /** Distinct (doc_id, word-3-gram) set over the corpus, persisted once per
@@ -298,53 +305,16 @@ object DedupQueries {
         .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
     }
 
+  /** MinHash candidate pairs over the shared band table. Buckets above
+    * MinhashBandCap star-link, so a duplicate group larger than the cap
+    * stays connected (spec-pinned by DedupSpec's planted over-cap group;
+    * dedup_recall_audit is the standing guard).
+    */
   private def minhashCandidates(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     cached(s, d, "minhash_cand") {
-      val bands = minhashBands(s, d)
-      // DF-BOUND the band join (the discipline every banded join in this
-      // file applies): a band value shared by > MinhashBandCap docs would
-      // generate pairs quadratically in its bucket — the x30 measured
-      // sweep caught exactly this: a corpus-wide boilerplate fragment
-      // inflated candidates 650x on 30x data (verified pairs grew exactly
-      // 30x) and dedup_near_dup_pipeline with them. Buckets at or below
-      // the cap enumerate all pairs; buckets ABOVE it are STAR-LINKED —
-      // every member pairs with the bucket's min-doc_id representative,
-      // O(bucket) pairs instead of O(bucket²). This keeps hot buckets
-      // bounded WITHOUT the recall cliff of dropping them outright: a
-      // duplicate GROUP larger than the cap (whose members share every
-      // band value, so every band goes hot) stays connected through its
-      // representative, and the downstream transitive closure
-      // (dedup_clusters / corpus_curation_clustered) recovers the whole
-      // group — spec-pinned by DedupSpec's planted over-cap group. True
-      // boilerplate collisions still die at the verify stage (J >= 0.5).
-      // The recall audit (dedup_recall_audit) is the standing guard.
-      val stats = bands.groupBy("band", "bv")
-        .agg(count(lit(1)).as("n_b"), min(col("doc_id")).as("rep"))
-      // hot buckets are FEW (each holds > cap docs, so there are at most
-      // corpus/cap of them) — broadcast the (band, bv, rep) side
-      val hot = stats.filter(col("n_b") > MinhashBandCap)
-        .select(col("band"), col("bv"), col("rep"))
-      // cool-bucket membership as an ANTI-join against the HOT keys: the
-      // cool relation (every bucket at or below the cap) grows with the
-      // corpus, so a semi-join against it shuffles the full band set at
-      // scale, while the hot side is bounded and already broadcast for
-      // the star-link — bands ∉ hot ≡ bands ∈ cool (stats covers every
-      // (band, bv) present in bands), zero exchange on the bands side.
-      // Anti build side = the star-link's broadcast(hot) verbatim, so
-      // ReuseExchange builds the hot broadcast (and its stats pass over
-      // the persisted bands) once; rep is unused by the anti-join.
-      val ok = bands.join(broadcast(hot), Seq("band", "bv"), "left_anti")
-      val a = ok.select(col("doc_id").as("doc_a"), col("band"), col("bv"))
-      val b = ok.select(col("doc_id").as("doc_b"),
-        col("band").as("band_b"), col("bv").as("bv_b"))
-      val pairwise = a.join(b, col("band") === col("band_b") &&
-          col("bv") === col("bv_b") && col("doc_a") < col("doc_b"))
-        .select("doc_a", "doc_b")
-      val star = bands.join(broadcast(hot), Seq("band", "bv"))
-        .filter(col("doc_id") =!= col("rep"))
-        .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
-      pairwise.unionByName(star).distinct()
+      BandedJoin.pairs(minhashBands(s, d), "doc_id", Seq("band", "bv"),
+        MinhashBandCap)
     }
 
   /** DuckDB rendering of [[minhashBands]]: a CTE prefix ending in
@@ -367,21 +337,8 @@ object DedupQueries {
   /** DuckDB rendering of [[minhashCandidates]]: a CTE prefix ending in
     * `cand(doc_a, doc_b)`.
     */
-  private val MinhashCandSql: String =
-    s"""$MinhashBandsSql,
-      |mstat AS MATERIALIZED (SELECT band, bv, count(*) AS n_b, min(doc_id) AS rep
-      |  FROM bands GROUP BY band, bv),
-      |mcool AS MATERIALIZED (SELECT band, bv FROM mstat WHERE n_b <= $MinhashBandCap),
-      |mbands AS MATERIALIZED (SELECT bands.* FROM bands JOIN mcool USING (band, bv)),
-      |mhot AS MATERIALIZED (SELECT band, bv, rep FROM mstat WHERE n_b > $MinhashBandCap),
-      |cand AS MATERIALIZED (SELECT DISTINCT doc_a, doc_b FROM (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM mbands a JOIN mbands b
-      |    ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
-      |  UNION ALL
-      |  SELECT h.rep AS doc_a, bands.doc_id AS doc_b
-      |  FROM bands JOIN mhot h USING (band, bv)
-      |  WHERE bands.doc_id <> h.rep))""".stripMargin
+  private val MinhashCandSql: String = s"$MinhashBandsSql,\n" +
+    BandedJoin.candSql("bands", "doc_id", Seq("band", "bv"), MinhashBandCap)
 
   /** The composed near-dup path: MinHash band candidates, then the exact
     * word-3-gram Jaccard verify computed ONLY for candidate pairs — the
@@ -898,40 +855,11 @@ object DedupQueries {
     // candidates+verify dedup built on it.
     QueryDef("dedup_simhash_pairs",
       (s, d) => simhashPairs(s, d, simhashTables(docCount(s, d))),
-      Some(s"""WITH $SimhashDialSql,
-        |w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-        |h AS (SELECT doc_id, substr(sha256(w), 1, (SELECT bw FROM dial)) AS hx FROM w WHERE len(w) > 0),
-        |e AS (SELECT doc_id, hx, unnest(range(0, 4 * (SELECT bw FROM dial))) AS b FROM h),
-        |v AS (SELECT doc_id, b,
-        |  ((instr('$Hex', substr(hx, (b // 4) + 1, 1)) - 1) >> (3 - (b % 4))) & 1 AS bit
-        |  FROM e),
-        |votes AS (SELECT doc_id, b, CAST(sum(2 * bit - 1) AS BIGINT) AS vote
-        |  FROM v GROUP BY 1, 2),
-        |sh AS (SELECT doc_id,
-        |  CAST(sum((CASE WHEN vote > 0 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END) << b) AS BIGINT) AS simhash
-        |  FROM votes GROUP BY doc_id),
-        |bands0 AS (SELECT doc_id, simhash, b,
-        |  (simhash >> (b * (SELECT bw FROM dial))) & ((CAST(1 AS BIGINT) << (SELECT bw FROM dial)) - 1) AS bv
-        |  FROM sh, (SELECT unnest(range(0, 4)) AS b)),
-        |sstat AS (SELECT b, bv, count(*) AS n_b, min(doc_id) AS rep
-        |  FROM bands0 GROUP BY b, bv),
-        |cool AS (SELECT b, bv FROM sstat WHERE n_b <= $SimhashBandCap),
-        |bands AS (SELECT bands0.* FROM bands0 JOIN cool USING (b, bv)),
-        |shot AS (SELECT s.b, s.bv, s.rep, r.simhash AS sim_rep
-        |  FROM sstat s JOIN sh r ON r.doc_id = s.rep
-        |  WHERE s.n_b > $SimhashBandCap),
-        |cand AS (SELECT DISTINCT doc_a, doc_b, sim_a, sim_b FROM (
-        |  SELECT a.doc_id AS doc_a, b2.doc_id AS doc_b,
-        |    a.simhash AS sim_a, b2.simhash AS sim_b
-        |  FROM bands a JOIN bands b2
-        |    ON a.b = b2.b AND a.bv = b2.bv AND a.doc_id < b2.doc_id
-        |  UNION ALL
-        |  SELECT h.rep AS doc_a, bands0.doc_id AS doc_b,
-        |    h.sim_rep AS sim_a, bands0.simhash AS sim_b
-        |  FROM bands0 JOIN shot h USING (b, bv)
-        |  WHERE bands0.doc_id <> h.rep))
-        |SELECT doc_a, doc_b, CAST(bit_count(xor(sim_a, sim_b)) AS BIGINT) AS hamming
-        |FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= 3""".stripMargin)),
+      Some(s"""WITH $SimhashBandsSql,
+        |${BandedJoin.candSql("bands", "doc_id", Seq("band", "bv"), SimhashBandCap)}
+        |SELECT doc_a, doc_b, CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
+        |FROM cand JOIN sh a ON doc_a = a.doc_id JOIN sh b ON doc_b = b.doc_id
+        |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3""".stripMargin)),
 
     // Band-bucket OCCUPANCY histogram for the MinHash band table — the
     // third of the occupancy triple (simhash / embedding-LSH / minhash):
@@ -968,36 +896,16 @@ object DedupQueries {
     // share). Cheap enough to run in every gate sweep.
     QueryDef("dedup_simhash_occupancy",
       (s, d) => {
-        val w = simhashBandBits(s, d)
-        val sh = cached(s, d, s"simhash_4x$w")(
-          simhashBits(s, d, hexDigits = w))
-        val mask = (1 << w) - 1
-        val bands = sh.select(col("doc_id"),
-            explode(sequence(lit(0), lit(3))).as("b"), col("simhash"))
-          .withColumn("bv", expr(s"(simhash >> (b * $w)) & $mask"))
-        val stats = bands.groupBy("b", "bv").agg(count(lit(1)).as("n_b"))
+        val stats = simhashBands(s, d, simhashTables(docCount(s, d)))
+          .groupBy("band", "bv").agg(count(lit(1)).as("n_b"))
         stats.groupBy(length(bin(col("n_b"))).cast("long").as("bin"))
           .agg(count(lit(1)).as("n_buckets"),
             sum("n_b").cast("long").as("n_docs"),
             max("n_b").cast("long").as("max_bucket"))
       },
-      Some(s"""WITH $SimhashDialSql,
-        |w AS MATERIALIZED (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-        |h AS MATERIALIZED (SELECT doc_id, substr(sha256(w), 1, (SELECT bw FROM dial)) AS hx FROM w WHERE len(w) > 0),
-        |e AS (SELECT doc_id, hx, unnest(range(0, 4 * (SELECT bw FROM dial))) AS b FROM h),
-        |v AS (SELECT doc_id, b,
-        |  ((instr('$Hex', substr(hx, (b // 4) + 1, 1)) - 1) >> (3 - (b % 4))) & 1 AS bit
-        |  FROM e),
-        |votes AS MATERIALIZED (SELECT doc_id, b, CAST(sum(2 * bit - 1) AS BIGINT) AS vote
-        |  FROM v GROUP BY 1, 2),
-        |sh AS MATERIALIZED (SELECT doc_id,
-        |  CAST(sum((CASE WHEN vote > 0 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END) << b) AS BIGINT) AS simhash
-        |  FROM votes GROUP BY doc_id),
-        |bands0 AS (SELECT doc_id, b,
-        |  (simhash >> (b * (SELECT bw FROM dial))) & ((CAST(1 AS BIGINT) << (SELECT bw FROM dial)) - 1) AS bv
-        |  FROM sh, (SELECT unnest(range(0, 4)) AS b)),
-        |sstat AS (SELECT b, bv, CAST(count(*) AS BIGINT) AS n_b
-        |  FROM bands0 GROUP BY b, bv)
+      Some(s"""WITH $SimhashBandsSql,
+        |sstat AS (SELECT band, bv, CAST(count(*) AS BIGINT) AS n_b
+        |  FROM bands GROUP BY band, bv)
         |SELECT CAST(len(bin(n_b)) AS BIGINT) AS bin,
         |  CAST(count(*) AS BIGINT) AS n_buckets,
         |  CAST(sum(n_b) AS BIGINT) AS n_docs,
@@ -1038,18 +946,9 @@ object DedupQueries {
         val g0 = docGrams(s, d)
         // df-bound: each surviving gram contributes at most MaxGramDf²/2
         // pairs to the join — no hot key can dominate a shuffle partition.
-        // The bound is applied as an ANTI-join against the HOT grams
-        // (df > MaxGramDf): the rare set is nearly every distinct gram
-        // and grows with the corpus (attaching it is a corpus-sized
-        // shuffle at scale), while the hot set is the stop-phrase
-        // inventory — bounded by instances/MaxGramDf and Zipf-tiny in
-        // practice — so the df gate broadcasts and g0 never shuffles to
-        // be filtered (g0 ∉ hot ≡ g0 ∈ rare; the agg covers every gram).
-        val hotGrams = g0.groupBy("gram")
-          .agg(count(lit(1)).as("gram_df"))
-          .filter(col("gram_df") > MaxGramDf)
-          .select("gram")
-        val g = g0.join(broadcast(hotGrams), "gram", "left_anti")
+        // The hot set is the stop-phrase inventory (Zipf-tiny), so the
+        // gate broadcasts and g0 never shuffles to be filtered.
+        val g = BandedJoin.cool(g0, Seq("gram"), MaxGramDf)
         val sz = g.groupBy("doc_id").agg(count(lit(1)).as("n"))
         val ga = g.select(col("doc_id").as("doc_a"), col("gram"))
         val gb = g.select(col("doc_id").as("doc_b"), col("gram").as("gram_b"))

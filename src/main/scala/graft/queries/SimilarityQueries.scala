@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.operators.BandedJoin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -44,8 +45,8 @@ object SimilarityQueries {
     * promise, now actually turning: the 10x scaling sweep measured the
     * fixed-4-bit version at 39x growth against 10x data. At the standard
     * fixtures (500–2000 vectors) this resolves to 4 bits, bit-identical
-    * to the pre-dial behavior, so the static 16-plane DuckDB oracles are
-    * unchanged.
+    * to the pre-dial behavior; the banded oracles derive the same width
+    * ([[LshDialSql]]).
     */
   private def lshTableBits(s: SparkSession, d: String): Int = {
     val n = java.lang.Long.parseLong(embKey(s, d).split("-")(0), 16)
@@ -62,6 +63,28 @@ object SimilarityQueries {
   private val LshDialSql: String =
     """dial AS MATERIALIZED (SELECT least(15, length(bin(
       |  greatest(16, (SELECT count(*) FROM embeddings) // 125) - 1))) AS bw)""".stripMargin
+
+  /** DuckDB rendering of [[lshBands]]: a CTE list (no `WITH`) ending in
+    * `tb(vec_id, t, bucket)`, 4 tables of `lshTableBits` planes each.
+    */
+  private val LshBandsSql: String =
+    s"""$LshDialSql,
+      |planes AS (
+      |  SELECT p, dim,
+      |    CASE WHEN instr('02468ace',
+      |      substr(sha256(CAST(p AS VARCHAR) || '-' || CAST(dim AS VARCHAR)), 1, 1)) > 0
+      |      THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS w
+      |  FROM (SELECT unnest(range(0, 4 * (SELECT bw FROM dial))) AS p),
+      |       (SELECT unnest(range(1, 65)) AS dim)),
+      |comps AS (SELECT vec_id,
+      |    unnest(range(1, len(embedding) + 1)) AS dim,
+      |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 10000) AS BIGINT) AS qx
+      |  FROM embeddings),
+      |proj AS MATERIALIZED (SELECT vec_id, p, CAST(sum(w * qx) AS BIGINT) AS proj
+      |  FROM comps JOIN planes USING (dim) GROUP BY 1, 2),
+      |tb AS MATERIALIZED (SELECT vec_id, p // (SELECT bw FROM dial) AS t,
+      |  CAST(sum((CASE WHEN proj > 0 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END) << CAST(p % (SELECT bw FROM dial) AS INT)) AS BIGINT) AS bucket
+      |  FROM proj GROUP BY 1, 2)""".stripMargin
 
   /** In-JVM memo (one materialization per sweep) over the disk store (one
     * TRAINING per fixture and trainer `version` ever) — the layering every
@@ -574,63 +597,34 @@ object SimilarityQueries {
     * near-dup cluster larger than the cap stays connected via its
     * representative while total pair work is bounded by cap·rows. At the
     * standard fixtures (≤ 2000 vectors, 16 buckets/table) no bucket
-    * reaches the cap, so the static DuckDB oracles see identical inputs.
+    * reaches the cap.
     */
   val LshBucketCap = 512
 
-  /** LSH candidate pairs (vec_a < vec_b): 4 tables × lshTableBits-bit
-    * buckets, pairwise within cool buckets, star-linked through the
-    * min-vec_id representative within hot ones (see [[LshBucketCap]]).
-    * `probeMax` bounds the smaller-id side of every pair: with
-    * Some(m), the result is exactly the unbounded result filtered to
-    * vec_a < m — pairwise keeps only a-sides below m and star buckets
-    * only fire when their representative (the bucket min, hence always
-    * the pair's vec_a) is below m — but the join never materializes
-    * pairs outside the probe set, which is what keeps the recall audit
-    * linear in the corpus rather than inheriting the full candidate
-    * volume (the x30 sweep measured the unbounded form at 5.8x growth
-    * on 3x data inside ann_recall_audit).
+  /** The LSH band table (vec_id, t, bucket): 4 tables × lshTableBits-bit
+    * buckets, shared by the candidate join and the occupancy histogram.
     */
-  private def lshCandidates(s: SparkSession, d: String,
-      probeMax: Option[Int]): DataFrame = {
+  private def lshBands(s: SparkSession, d: String): DataFrame = {
     graft.functions.LshBits.register(s)
     val b = lshTableBits(s, d)
-    val tb = table(s, d, "embeddings")
+    table(s, d, "embeddings")
       .select(col("vec_id"), expr(s"lsh_bits(embedding, ${4 * b})").as("bits"))
       .select(col("vec_id"),
         explode(sequence(lit(0L), lit(3L))).as("t"), col("bits"))
       .withColumn("bucket", expr(s"(bits >> (t * $b)) & ${(1 << b) - 1}"))
       .drop("bits")
-    val stats = tb.groupBy("t", "bucket")
-      .agg(count(lit(1)).as("n_b"), min(col("vec_id")).as("rep"))
-    val hot0 = stats.filter(col("n_b") > LshBucketCap)
-      .select(col("t"), col("bucket"), col("rep"))
-    // cool-bucket membership as an ANTI-join against the HOT keys (the
-    // UNFILTERED hot0 — every hot bucket must leave the pairwise path
-    // regardless of probeMax): cool grows with the corpus, so a semi-join
-    // against it shuffles the full (vec, table, bucket) set at scale,
-    // while hot0 is bounded by corpus/cap and already broadcast for the
-    // star-link — tb ∉ hot ≡ tb ∈ cool (stats covers every (t, bucket)
-    // present in tb), zero exchange on the tb side at any corpus size.
-    // Anti build side = broadcast(hot0) verbatim (rep unused by the
-    // anti-join): in the unbounded (probeMax = None) path the star-link
-    // broadcasts the identical subtree, so ReuseExchange builds the hot
-    // broadcast and its stats pass once.
-    val ok = tb.join(broadcast(hot0), Seq("t", "bucket"), "left_anti")
-    val aSide = probeMax.fold(ok)(m => ok.filter(col("vec_id") < m))
-    val pairwise = aSide
-      .select(col("vec_id").as("vec_a"), col("t"), col("bucket"))
-      .join(ok.select(col("vec_id").as("vec_b"), col("t").as("t_b"),
-        col("bucket").as("bucket_b")),
-        col("t") === col("t_b") && col("bucket") === col("bucket_b") &&
-          col("vec_a") < col("vec_b"))
-      .select("vec_a", "vec_b")
-    val hot = probeMax.fold(hot0)(m => hot0.filter(col("rep") < m))
-    val star = tb.join(broadcast(hot), Seq("t", "bucket"))
-      .filter(col("vec_id") =!= col("rep"))
-      .select(col("rep").as("vec_a"), col("vec_id").as("vec_b"))
-    pairwise.unionByName(star).distinct()
   }
+
+  /** LSH candidate pairs (vec_a < vec_b) over [[lshBands]], star-linked
+    * above [[LshBucketCap]]. `probeMax` bounds vec_a (see
+    * [[graft.operators.BandedJoin.pairs]]): the recall audit only needs
+    * pairs with vec_a in its probe set, and the x30 sweep measured the
+    * unbounded form at 5.8x growth on 3x data inside ann_recall_audit.
+    */
+  private def lshCandidates(s: SparkSession, d: String,
+      probeMax: Option[Long]): DataFrame =
+    BandedJoin.pairs(lshBands(s, d), "vec_id", Seq("t", "bucket"),
+      LshBucketCap, probeMax = probeMax)
 
   /** Exact quantized-cosine ≥ 0.4 verify over candidate (vec_a, vec_b)
     * pairs — the shared verify stage of the LSH near-dup path.
@@ -1248,35 +1242,8 @@ object SimilarityQueries {
     // candidates. Never an all-pairs join; the cost dial is (tables, planes).
     QueryDef("dedup_embedding_lsh",
       (s, d) => embeddingLsh(s, d),
-      Some(s"""WITH planes AS (
-        |  SELECT p, dim,
-        |    CASE WHEN instr('02468ace',
-        |      substr(sha256(CAST(p AS VARCHAR) || '-' || CAST(dim AS VARCHAR)), 1, 1)) > 0
-        |      THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS w
-        |  FROM (SELECT unnest(range(0, 16)) AS p),
-        |       (SELECT unnest(range(1, 65)) AS dim)),
-        |comps AS (SELECT vec_id,
-        |    unnest(range(1, len(embedding) + 1)) AS dim,
-        |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 10000) AS BIGINT) AS qx
-        |  FROM embeddings),
-        |proj AS (SELECT vec_id, p, CAST(sum(w * qx) AS BIGINT) AS proj
-        |  FROM comps JOIN planes USING (dim) GROUP BY 1, 2),
-        |tb AS (SELECT vec_id, p // 4 AS t,
-        |  CAST(sum((CASE WHEN proj > 0 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END) << CAST(p % 4 AS INT)) AS BIGINT) AS bucket
-        |  FROM proj GROUP BY 1, 2),
-        |tstat AS (SELECT t, bucket, count(*) AS n_b, min(vec_id) AS rep
-        |  FROM tb GROUP BY t, bucket),
-        |tcool AS (SELECT t, bucket FROM tstat WHERE n_b <= $LshBucketCap),
-        |tok AS (SELECT tb.* FROM tb JOIN tcool USING (t, bucket)),
-        |thot AS (SELECT t, bucket, rep FROM tstat WHERE n_b > $LshBucketCap),
-        |cand AS (SELECT DISTINCT vec_a, vec_b FROM (
-        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-        |  FROM tok a JOIN tok b
-        |    ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id
-        |  UNION ALL
-        |  SELECT h.rep AS vec_a, tb.vec_id AS vec_b
-        |  FROM tb JOIN thot h USING (t, bucket)
-        |  WHERE tb.vec_id <> h.rep)),
+      Some(s"""WITH $LshBandsSql,
+        |${BandedJoin.candSql("tb", "vec_id", Seq("t", "bucket"), LshBucketCap)},
         |v AS (SELECT vec_id,
         |  list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS qe
         |  FROM embeddings),
@@ -1379,7 +1346,7 @@ object SimilarityQueries {
         // full corpus-wide candidate volume — the audit that guards
         // recall must itself stay bounded (the x30 sweep measured the
         // unbounded audit at 5.8x growth on 3x data).
-        val lsh = cosineVerify(s, d, lshCandidates(s, d, Some(128)))
+        val lsh = cosineVerify(s, d, lshCandidates(s, d, Some(128L)))
           .select(col("vec_a").as("l_a"), col("vec_b").as("l_b"))
         truth.join(lsh,
             col("vec_a") === col("l_a") && col("vec_b") === col("l_b"), "left")
@@ -1391,37 +1358,9 @@ object SimilarityQueries {
               .otherwise(col("found").cast("double") /
                 col("total_true").cast("double")).as("recall"))
       },
-      Some(s"""WITH planes AS (
-        |  SELECT p, dim,
-        |    CASE WHEN instr('02468ace',
-        |      substr(sha256(CAST(p AS VARCHAR) || '-' || CAST(dim AS VARCHAR)), 1, 1)) > 0
-        |      THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS w
-        |  FROM (SELECT unnest(range(0, 16)) AS p),
-        |       (SELECT unnest(range(1, 65)) AS dim)),
-        |comps AS (SELECT vec_id,
-        |    unnest(range(1, len(embedding) + 1)) AS dim,
-        |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 10000) AS BIGINT) AS qx
-        |  FROM embeddings),
-        |proj AS (SELECT vec_id, p, CAST(sum(w * qx) AS BIGINT) AS proj
-        |  FROM comps JOIN planes USING (dim) GROUP BY 1, 2),
-        |tb AS (SELECT vec_id, p // 4 AS t,
-        |  CAST(sum((CASE WHEN proj > 0 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END) << CAST(p % 4 AS INT)) AS BIGINT) AS bucket
-        |  FROM proj GROUP BY 1, 2),
-        |tstat AS (SELECT t, bucket, count(*) AS n_b, min(vec_id) AS rep
-        |  FROM tb GROUP BY t, bucket),
-        |tcool AS (SELECT t, bucket FROM tstat WHERE n_b <= $LshBucketCap),
-        |tok AS (SELECT tb.* FROM tb JOIN tcool USING (t, bucket)),
-        |thot AS (SELECT t, bucket, rep FROM tstat
-        |  WHERE n_b > $LshBucketCap AND rep < 128),
-        |cand AS (SELECT DISTINCT vec_a, vec_b FROM (
-        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-        |  FROM tok a JOIN tok b
-        |    ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id
-        |  WHERE a.vec_id < 128
-        |  UNION ALL
-        |  SELECT h.rep AS vec_a, tb.vec_id AS vec_b
-        |  FROM tb JOIN thot h USING (t, bucket)
-        |  WHERE tb.vec_id <> h.rep)),
+      Some(s"""WITH $LshBandsSql,
+        |${BandedJoin.candSql("tb", "vec_id", Seq("t", "bucket"), LshBucketCap,
+            probeMax = Some(128L))},
         |v AS (SELECT vec_id,
         |  list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS qe
         |  FROM embeddings),
@@ -1457,37 +1396,14 @@ object SimilarityQueries {
     // the banding the candidate join already computes.
     QueryDef("ann_lsh_occupancy",
       (s, d) => {
-        graft.functions.LshBits.register(s)
-        val b = lshTableBits(s, d)
-        val tb = table(s, d, "embeddings")
-          .select(col("vec_id"),
-            expr(s"lsh_bits(embedding, ${4 * b})").as("bits"))
-          .select(col("vec_id"),
-            explode(sequence(lit(0L), lit(3L))).as("t"), col("bits"))
-          .withColumn("bucket", expr(s"(bits >> (t * $b)) & ${(1 << b) - 1}"))
-        val stats = tb.groupBy("t", "bucket").agg(count(lit(1)).as("n_b"))
+        val stats = lshBands(s, d).groupBy("t", "bucket")
+          .agg(count(lit(1)).as("n_b"))
         stats.groupBy(length(bin(col("n_b"))).cast("long").as("bin"))
           .agg(count(lit(1)).as("n_buckets"),
             sum("n_b").cast("long").as("n_vectors"),
             max("n_b").cast("long").as("max_bucket"))
       },
-      Some(s"""WITH $LshDialSql,
-        |planes AS (
-        |  SELECT p, dim,
-        |    CASE WHEN instr('02468ace',
-        |      substr(sha256(CAST(p AS VARCHAR) || '-' || CAST(dim AS VARCHAR)), 1, 1)) > 0
-        |      THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS w
-        |  FROM (SELECT unnest(range(0, 4 * (SELECT bw FROM dial))) AS p),
-        |       (SELECT unnest(range(1, 65)) AS dim)),
-        |comps AS (SELECT vec_id,
-        |    unnest(range(1, len(embedding) + 1)) AS dim,
-        |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 10000) AS BIGINT) AS qx
-        |  FROM embeddings),
-        |proj AS MATERIALIZED (SELECT vec_id, p, CAST(sum(w * qx) AS BIGINT) AS proj
-        |  FROM comps JOIN planes USING (dim) GROUP BY 1, 2),
-        |tb AS (SELECT vec_id, p // (SELECT bw FROM dial) AS t,
-        |  CAST(sum((CASE WHEN proj > 0 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END) << CAST(p % (SELECT bw FROM dial) AS INT)) AS BIGINT) AS bucket
-        |  FROM proj GROUP BY 1, 2),
+      Some(s"""WITH $LshBandsSql,
         |tstat AS (SELECT t, bucket, CAST(count(*) AS BIGINT) AS n_b
         |  FROM tb GROUP BY t, bucket)
         |SELECT CAST(len(bin(n_b)) AS BIGINT) AS bin,

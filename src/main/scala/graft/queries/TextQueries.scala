@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.operators.BandedJoin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,6 +19,11 @@ object TextQueries {
     s"(length($hay) - length(replace($hay, '$needle', ''))) DIV ${needle.length}"
 
   private val BpeRounds = 8
+
+  /** Max images one phash (band, value) bucket may hold and still enter
+    * the candidate join (multimodal_phash): bounds a bucket at 496 pairs;
+    * hotter buckets are dropped. */
+  val PhashBandCap = 32
 
   /** Content digest of the documents fixture, memoized per (session,
     * dir) — the IndexStore key for text-trained artifacts (BPE merges,
@@ -1018,33 +1024,13 @@ object TextQueries {
             expr("ph_lo % 65536"), expr("ph_lo DIV 65536"),
             expr("ph_hi % 65536"), expr("ph_hi DIV 65536")))
             .as(Seq("band", "bv")))
-        // DF-BOUND the candidate join (the stop-gram discipline applied
-        // to image bands): a band value shared by > 32 images is
-        // non-discriminative boilerplate — synthetic gradients here, flat
-        // borders/letterboxes in real corpora — and its bucket generates
-        // pairs QUADRATICALLY (the 10x scaling sweep measured one such
-        // bucket at 70% of the corpus: 64M candidate pairs at 8k images,
-        // 35x growth vs 10x data). Skipping hot bands bounds per-bucket
-        // work at 496 pairs; true near-dups still collide on their other
-        // three bands. The population agg rides the same (band, bv)
-        // partitioning as the join it guards.
-        // cool-band membership as an ANTI-join against the HOT keys: hot
-        // bands are FEW (at most corpus/32 buckets, boilerplate gradients
-        // in practice) while cool is every remaining bucket and grows
-        // with the corpus — the anti form keeps the probe side
-        // exchange-free at any corpus size (bands ∉ hot ≡ bands ∈ cool;
-        // the agg covers every (band, bv) present in bands).
-        val hot = bands.groupBy("band", "bv")
-          .agg(count(lit(1)).as("n_b")).filter(col("n_b") > 32)
-          .select("band", "bv")
-        val okBands = bands.join(broadcast(hot), Seq("band", "bv"), "left_anti")
-        val cand = okBands
-          .select(col("doc_id").as("doc_a"), col("band"), col("bv"))
-          .join(okBands.select(col("doc_id").as("doc_b"),
-            col("band").as("band_b"), col("bv").as("bv_b")),
-            col("band") === col("band_b") && col("bv") === col("bv_b") &&
-              col("doc_a") < col("doc_b"))
-          .select("doc_a", "doc_b").distinct()
+        // hot bands (> PhashBandCap images) are non-discriminative
+        // boilerplate — synthetic gradients here, flat borders and
+        // letterboxes in real corpora; the 10x sweep measured one bucket
+        // at 70% of the corpus — and are dropped: true near-dups still
+        // collide on their other three bands
+        val cand = BandedJoin.pairs(bands, "doc_id",
+          Seq("band", "bv"), PhashBandCap, BandedJoin.Drop)
         val ham = cand
           .join(hcached.select(col("doc_id").as("doc_a"),
             col("ph_hi").as("ha"), col("ph_lo").as("la")), "doc_a")
@@ -1080,17 +1066,12 @@ object TextQueries {
         |    CAST(${half(32 until 64)} AS BIGINT) AS ph_hi,
         |    CAST(${half(0 until 32)} AS BIGINT) AS ph_lo
         |  FROM mm),
-        |bnd AS (SELECT doc_id, b,
+        |bnd AS (SELECT doc_id, b AS band,
         |    CASE b WHEN 0 THEN ph_lo % 65536 WHEN 1 THEN ph_lo // 65536
         |      WHEN 2 THEN ph_hi % 65536 ELSE ph_hi // 65536 END AS bv
         |  FROM ph, (SELECT unnest(range(0, 4)) AS b)),
-        |cool AS (SELECT b, bv FROM bnd GROUP BY b, bv
-        |  HAVING count(*) <= 32),
-        |bok AS (SELECT bnd.doc_id, bnd.b, bnd.bv
-        |  FROM bnd JOIN cool USING (b, bv)),
-        |cand AS (SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b
-        |  FROM bok a JOIN bok c ON a.b = c.b AND a.bv = c.bv
-        |    AND a.doc_id < c.doc_id),
+        |${BandedJoin.candSql("bnd", "doc_id", Seq("band", "bv"),
+            PhashBandCap, BandedJoin.Drop)},
         |ham AS (SELECT doc_a, doc_b FROM cand
         |  JOIN ph pa ON doc_a = pa.doc_id JOIN ph pb ON doc_b = pb.doc_id
         |  WHERE bit_count(xor(pa.ph_hi, pb.ph_hi)) +

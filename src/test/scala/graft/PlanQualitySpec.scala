@@ -671,4 +671,55 @@ class PlanQualitySpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"),
       s"no cartesian in the pagerank rounds:\n$p")
   }
+
+  test("banded joins gate cool buckets with a broadcast anti-join against the capped hot set") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, GreaterThan, Literal}
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
+    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+    // every physical node, descending into adaptive wrappers and the
+    // plans of persisted intermediates (the memoized candidate sets)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.inputPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    def capFilter(cap: Int)(n: SparkPlan): Boolean = n match {
+      case f: FilterExec => f.condition.exists {
+        case GreaterThan(a: AttributeReference, Literal(v, _)) =>
+          a.name == "n_b" && v.toString == cap.toString
+        case _ => false
+      }
+      case _ => false
+    }
+    import graft.queries.{DedupQueries => D, SimilarityQueries => S, TextQueries => T}
+    Seq("dedup_minhash_lsh" -> D.MinhashBandCap,
+      "dedup_simhash_pairs" -> D.SimhashBandCap,
+      "dedup_embedding_lsh" -> S.LshBucketCap,
+      "ann_recall_audit" -> S.LshBucketCap,
+      "multimodal_phash" -> T.PhashBandCap,
+      "dedup_ngram_jaccard" -> D.MaxGramDf).foreach { case (q, cap) =>
+      val all = nodes(SparkEntry.queries(q)(spark, dir)
+        .queryExecution.executedPlan)
+      val antis = all.collect {
+        case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
+      }
+      assert(antis.nonEmpty, s"$q: no broadcast anti-join")
+      antis.foreach { j =>
+        assert(j.buildSide == BuildRight && nodes(j.right).exists(capFilter(cap)),
+          s"$q: the anti-join must build on the hot set (n_b > $cap):\n$j")
+      }
+      val shuffled = all.collect {
+        case j: SortMergeJoinExec if Seq(LeftAnti, LeftSemi).contains(j.joinType) => j
+        case j: ShuffledHashJoinExec if Seq(LeftAnti, LeftSemi).contains(j.joinType) => j
+        case j: BroadcastNestedLoopJoinExec if Seq(LeftAnti, LeftSemi).contains(j.joinType) => j
+      }
+      assert(shuffled.isEmpty, s"$q: shuffled anti/semi join:\n${shuffled.mkString("\n")}")
+    }
+  }
 }

@@ -27,6 +27,15 @@ class LedgerHeadCacheSpec extends SparkSpec {
   private def servedFromCache(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.isInstanceOf[InMemoryRelation]
 
+  private def persistedIds(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** RDDs persisted now that were not at `before`. Counted by id, not by
+    * map size: the context holds persisted RDDs weakly, so an earlier
+    * suite's unreachable RDD can leave the map mid-test. */
+  private def persistedSince(before: Set[Int]): Int =
+    (persistedIds() -- before).size
+
   test("after every kind of publish, read() equals the uncached readAt(head)") {
     val store = new LedgerStore(spark, tmpDir("head-ledger"), compactEvery = 3)
     var reread = false // has some chain of this ledger been read twice?
@@ -153,7 +162,7 @@ class LedgerHeadCacheSpec extends SparkSpec {
 
   test("a ledger whose chains are each read once is never persisted") {
     graft.queries.Q.release(spark)
-    val before = spark.sparkContext.getPersistentRDDs.size
+    val before = persistedIds()
     val store = new LedgerStore(spark, tmpDir("head-once"), compactEvery = 3)
     // an ingest pass's pattern: one read of the head, then a publish
     (1 to 5).foreach { i =>
@@ -162,22 +171,22 @@ class LedgerHeadCacheSpec extends SparkSpec {
       assert(head.count() == i - 1)
       store.merge(rows(UploadStatus.Pending, s"u$i"))
     }
-    assert(spark.sparkContext.getPersistentRDDs.size == before)
+    assert(persistedSince(before) == 0)
   }
 
   test("a ledger pins at most one persisted head, and release frees it") {
     graft.queries.Q.release(spark)
-    val before = spark.sparkContext.getPersistentRDDs.size
+    val before = persistedIds()
     val store = new LedgerStore(spark, tmpDir("head-bounded"), compactEvery = 3)
     (1 to 7).foreach { i =>
       store.merge(rows(UploadStatus.Pending, s"u$i"))
       // read twice: the head is persisted and materialized
       assert(store.read().count() == i && store.read().count() == i)
-      val held = spark.sparkContext.getPersistentRDDs.size - before
+      val held = persistedSince(before)
       assert(held == 1, s"$held persisted heads after merge $i")
     }
     graft.queries.Q.release(spark)
-    assert(spark.sparkContext.getPersistentRDDs.size == before)
+    assert(persistedSince(before) == 0)
     // released, not poisoned: the next reads resolve again
     assert(store.read().count() == 7 && store.read().count() == 7)
   }

@@ -86,4 +86,31 @@ class LedgerTimeTravelSpec extends SparkSpec {
     assert(store.read().select("upload_id").distinct().count() >= 9)
     val _ = head // head itself may or may not be inside the retained window
   }
+
+  test("readAt on a listed generation whose dir was swept throws, not PATH_NOT_FOUND") {
+    val dir = tmpDir("tt-swept-dirs")
+    val store = new LedgerStore(spark, dir, compactEvery = 2)
+    (1 to 8).foreach(i => store.merge(upsert(Seq(s"u$i"), "pending")))
+
+    // age every non-live artifact past the grace window, older seqs
+    // older, so the sweep's keep-newest ordering is deterministic
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val live = store.liveChain().map(_.dirName).toSet
+    fs.listStatus(new Path(dir)).zipWithIndex.foreach { case (st, i) =>
+      if (!live.contains(st.getPath.getName))
+        fs.setTimes(st.getPath, 1000L + i, 1000L + i)
+    }
+    store.merge(upsert(Seq("w"), "pending"))
+
+    // the sweep keeps 4 pointers below the live base but only 2 old dirs:
+    // every listed generation either resolves or refuses with the
+    // documented IllegalStateException, and at least one refuses
+    val outcomes = store.history().select("seq").as[Long].collect().map { seq =>
+      try { store.readAt(seq).collect(); true }
+      catch { case _: IllegalStateException => false }
+    }
+    assert(outcomes.contains(false),
+      "no listed generation lost its dir: the case does not exercise the sweep")
+    assert(store.read().count() == 9)
+  }
 }
