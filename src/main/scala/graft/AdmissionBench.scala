@@ -40,27 +40,21 @@ import org.apache.spark.sql.functions._
 object AdmissionBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val mode = sys.env.getOrElse("SPARK_GRAFT_MODE", "near")
     val batchSizes = sys.env.getOrElse("SPARK_GRAFT_BATCH_SIZES", "1000,4000")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = GraftSession.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      // Admission shuffles are TRIGGER-bounded, not corpus-bounded: the
-      // accumulated index is only ever scanned (scan parallelism comes
-      // from file splits, not shuffle width), so every Exchange in the
-      // admission plan carries at most one micro-batch of rows. The
-      // width is therefore derived from the BATCH bytes per run below —
-      // deriving it from the fixture (what batch analytics over the
-      // whole corpus wants, and what this main did first) measured
-      // 3197 → 4005 docs/s at x100/bs=16000 just from undoing the
-      // 160-partition overwidth. Session default = core-count floor;
-      // an explicit SPARK_GRAFT_SHUFFLE_PARTITIONS still wins.
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Admission shuffles are TRIGGER-bounded, not corpus-bounded: the
+    // accumulated index is only ever scanned (scan parallelism comes
+    // from file splits, not shuffle width), so every Exchange in the
+    // admission plan carries at most one micro-batch of rows. The
+    // width is therefore derived from the BATCH bytes per run below —
+    // deriving it from the fixture (what batch analytics over the
+    // whole corpus wants, and what this main did first) measured
+    // 3197 → 4005 docs/s at x100/bs=16000 just from undoing the
+    // 160-partition overwidth. Session default = core-count floor;
+    // an explicit SPARK_GRAFT_SHUFFLE_PARTITIONS still wins.
+    val spark = GraftSession.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // bytes of the table the batches are actually CUT from — semantic
     // admission streams embeddings.parquet, exact/near stream
@@ -96,7 +90,7 @@ object AdmissionBench {
           // below would otherwise run their k×rows work on 1-2 tasks
           val v = spark.read.parquet(s"$sfDir/embeddings.parquet")
             .select(col("vec_id"), col("embedding"))
-            .repartition(cpus.toInt)
+            .repartition(cpus)
           // offline-trained coarse quantizer (the production shape): the
           // training is index BUILD, not admission, so it is untimed here.
           // k scales as sqrt(n) — the same discipline as the batch IVF
@@ -153,7 +147,7 @@ object AdmissionBench {
           // batch pays its own assignment in the timed window
           val v = spark.read.parquet(s"$sfDir/embeddings.parquet")
             .select(col("vec_id"), col("embedding"))
-            .repartition(cpus.toInt)
+            .repartition(cpus)
           (v.withColumn("oid", pmod(col("vec_id"), lit(1000000))),
             v.count())
         case _ =>
@@ -171,7 +165,7 @@ object AdmissionBench {
       val width = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
         .map(_.trim.toInt)
         .getOrElse(graft.operators.Autoscale.shufflePartitions(
-          batchBytes, cpus.toInt))
+          batchBytes, cpus))
       spark.conf.set("spark.sql.shuffle.partitions", width.toString)
       System.err.println(s"[admission] $mode bs=$bs shuffle width $width " +
         s"(~${batchBytes >> 20} MB/trigger)")
@@ -346,20 +340,11 @@ object AdmissionBench {
     }.mkString("[", ",", "]")
     val rec = s"""{"metric":"admission","sf":"$sfDir","runs":$line}"""
     println(rec)
-    try {
-      val dir = new java.io.File(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", "/root/repo/bench"))
-      dir.mkdirs()
-      val f = new java.io.File(dir,
-        s"admission-$mode-${System.currentTimeMillis()}.json")
-      java.nio.file.Files.write(f.toPath, (rec + "\n").getBytes("UTF-8"))
-      // machine-greppable: round_close.sh captures THIS path instead of
-      // globbing for the newest file (a best-effort persist failure
-      // would otherwise silently feed a stale record to the flag tool)
-      System.err.println(s"[admission] record ${f.getPath}")
-    } catch { case e: Exception =>
-      System.err.println(s"[admission] persist failed: ${e.getMessage}")
-    }
+    // machine-greppable: round_close.sh captures THIS path instead of
+    // globbing for the newest file (a best-effort persist failure
+    // would otherwise silently feed a stale record to the flag tool)
+    BenchRecord.write(s"admission-$mode", rec, "admission")
+      .foreach(p => System.err.println(s"[admission] record $p"))
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Host-window calibration battery (builder-side): a FIXED set of five
   * cheap, plan-stable queries whose wall clock moves only with the host
   * window, never with engine changes — scan+agg, hash join, window
@@ -40,17 +38,9 @@ object Calibrate {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val rounds = sys.env.getOrElse("SPARK_GRAFT_CAL_ROUNDS", "3").toInt
-    val spark = GraftSession.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        graft.operators.Autoscale.resolve(sfDir, cpus.toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.session(
+      graft.operators.Autoscale.resolve(sfDir, GraftSession.cpus))
     spark.sparkContext.setLogLevel("WARN")
 
     def once(name: String): Double = {
@@ -72,17 +62,8 @@ object Calibrate {
     val rec = f"""{"metric":"calibration","value":$total%.3f,""" +
       f""""unit":"sec","rounds":$rounds,"queries":$qjson,"sf":"$sfDir"}"""
     println(rec)
-    try {
-      val dir = new java.io.File(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", "/root/repo/bench"))
-      dir.mkdirs()
-      val f = new java.io.File(dir,
-        s"calibration-${System.currentTimeMillis()}.json")
-      java.nio.file.Files.write(f.toPath, (rec + "\n").getBytes("UTF-8"))
-      System.err.println(s"[calibrate] record ${f.getPath}")
-    } catch { case e: Exception =>
-      System.err.println(s"[calibrate] persist failed: ${e.getMessage}")
-    }
+    BenchRecord.write("calibration", rec, "calibrate")
+      .foreach(p => System.err.println(s"[calibrate] record $p"))
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Composed corpus-build measurement (builder-side): runs the end-to-end
   * curation chain — quality gate → exact dedup → near-dup removal →
   * decontamination → context-window packing → shard manifest
@@ -17,7 +15,6 @@ import org.apache.spark.sql.SparkSession
 object CorpusBuild {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     sys.env.get("SPARK_GRAFT_INDEX_DIR")
       .foreach(p => sys.props("graft.index.dir") = p)
     // Reliable-checkpoint the long-lived memoized artifacts by default:
@@ -26,17 +23,10 @@ object CorpusBuild {
     // before the stage-boundary GC alone got it through). Env wins.
     if (!sys.env.contains("SPARK_GRAFT_MEMO_CHECKPOINT"))
       sys.props("spark.graft.memo.checkpoint") = "1"
-    val spark = GraftSession.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      // input-derived shuffle width (Autoscale): floors at the core
-      // count on standard fixtures, widens on scaled ones — see Bench
-      .config("spark.sql.shuffle.partitions",
-        graft.operators.Autoscale.resolve(sfDir, cpus.toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // input-derived shuffle width (Autoscale): floors at the core
+    // count on standard fixtures, widens on scaled ones — see Bench
+    val spark = GraftSession.session(
+      graft.operators.Autoscale.resolve(sfDir, GraftSession.cpus))
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: pays session/JIT/codegen startup once so stage 1
     // measures the stage, not the JVM.
@@ -79,17 +69,7 @@ object CorpusBuild {
       "rows" -> jmap(rows.map(r => r._1 -> r._4.toString)),
       "sf" -> ("\"" + sfDir + "\"")))
     println(line)
-    try {
-      val dir = new java.io.File(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", "/root/repo/bench"))
-      dir.mkdirs()
-      val f = new java.io.File(dir,
-        s"corpus_build-${System.currentTimeMillis()}.json")
-      java.nio.file.Files.write(f.toPath, (line + "\n").getBytes("UTF-8"))
-      ()
-    } catch { case e: Exception =>
-      System.err.println(s"[corpus-build] persist failed: ${e.getMessage}")
-    }
+    BenchRecord.write("corpus_build", line, "corpus-build")
     spark.stop()
   }
 }

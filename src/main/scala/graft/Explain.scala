@@ -22,21 +22,12 @@ object Explain {
     val suffix = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val unknown = names.toSet -- SparkEntry.all.map(_.name).toSet --
       operatorPlans.keySet
     require(unknown.isEmpty,
       s"not registered: ${unknown.toSeq.sorted.mkString(", ")}")
-    val shufflePartitions =
-      graft.operators.Autoscale.resolve(sfDir, cpus.toInt).toString
-    val spark = GraftSession.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.session(
+      graft.operators.Autoscale.resolve(sfDir, GraftSession.cpus))
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
     val byName = SparkEntry.all.map(q => q.name -> q).toMap

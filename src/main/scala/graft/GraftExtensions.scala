@@ -11,13 +11,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * Two supported paths:
   *
-  *  - at session BUILD time (the standard plugin mechanism):
-  *    {{{
-  *    SparkSession.builder()
-  *      .config("spark.sql.extensions", "graft.GraftExtensions")
-  *      .getOrCreate()
-  *    }}}
-  *    or `builder.withExtensions(new GraftExtensions)`;
+  *  - at session BUILD time (the standard plugin mechanism): set
+  *    `spark.sql.extensions=graft.GraftExtensions` on the builder, or
+  *    call `builder.withExtensions(new GraftExtensions)`;
   *
   *  - on an EXISTING session (tests, notebooks): `GraftExtensions
   *    .install(spark)` — uses the runtime function registry and

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-job timeline for one query (builder-side diagnostic, not part of
   * the driver contract): prints each Spark job's wall window and the GAP
@@ -44,23 +43,8 @@ object JobTrace {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shufflePartitions =
-      graft.operators.Autoscale.resolve(sfDir, cpus.toInt).toString
-    var b = GraftSession.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    // experiment lever: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach {
-      _.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); b = b.config(k, v)
-      }
-    }
-    val spark = b.getOrCreate()
+    val spark = GraftSession.session(
+      graft.operators.Autoscale.resolve(sfDir, GraftSession.cpus))
     spark.sparkContext.setLogLevel("WARN")
     val t = new Tracer
     spark.sparkContext.addSparkListener(t)

@@ -43,14 +43,7 @@ object ScaleGen {
     require(args.length == 3, "usage: ScaleGen <srcDir> <destDir> <multiplier>")
     val (src, dest, m) = (args(0), args(1), args(2).toInt)
     require(m >= 1, s"multiplier must be >= 1, got $m")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.session(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, src, dest, m)
     spark.stop()

@@ -3,17 +3,14 @@ package graft
 import graft.queries._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The registered query surface — see SURVEY.md §7.
   *
   * Every operator from SURVEY.md §2 plus the LLM-data-pipeline extension
   * surface (dedup / similarity / text) is registered here as a named query
   * over the driver's parquet tables, with a matching DuckDB oracle where
-  * ANSI SQL can express it. `events.ts` is schema-adaptive: the engine
-  * normalizes it to an epoch-nanos LONG at the scan boundary whatever the
-  * fixture's physical parquet type — TIMESTAMP(MICROS) (current driver
-  * testdata), TIMESTAMP(NANOS)-as-long (legacy fixtures under
-  * `spark.sql.legacy.parquet.nanosAsLong=true`, still set by
-  * Verify/Bench/tests and harmless on micros data). See `Q.normalizeEventsTs`.
+  * ANSI SQL can express it. Queries load tables through `Q.table`, which
+  * hands `events.ts` on as a TIMESTAMP (the fixtures store parquet
+  * TIMESTAMP(MICROS), read as TIMESTAMP_NTZ and cast once there).
   */
 object SparkEntry {
 

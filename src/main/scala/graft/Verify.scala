@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,34 +9,13 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER overrides the single-JVM default — the
     // multi-process smoke (`local-cluster[n,cores,mem_mb]`) runs the
     // whole contract with executors in SEPARATE JVMs, catching
     // single-process assumptions (driver-local file visibility,
-    // in-process lock reliance) before any real-cluster claim. A
-    // local-cluster worker JVM inherits neither our classpath nor the
-    // JDK-17 --add-opens set, so both are forwarded explicitly.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = GraftSession.tuned(SparkSession.builder())
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Legacy-fixture compat: old events.ts was TIMESTAMP(NANOS), read as
-      // a nanos LONG under this flag. Current testdata is TIMESTAMP(MICROS)
-      // (flag is then a no-op) and Q.normalizeEventsTs adapts per schema.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    val builder =
-      if (master.startsWith("local-cluster"))
-        builder0
-          .config("spark.executor.extraClassPath",
-            sys.props("java.class.path"))
-          .config("spark.executor.extraJavaOptions",
-            sys.env.getOrElse("SPARK_GRAFT_EXEC_JAVA_OPTS", ""))
-      else builder0
-    val spark = builder.getOrCreate()
+    // in-process lock reliance) before any real-cluster claim.
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.session(cpus, GraftSession.envMaster(cpus))
     spark.sparkContext.setLogLevel("WARN")
     // Clean slate: a failed query must surface as a MISSING result, never
     // as a stale parquet from a previous run passing the compare.

@@ -22,8 +22,8 @@ object Layout {
 
   /** Write `df` as parquet partitioned by a derived UTC day column.
     *
-    * @param tsMicros expression yielding epoch MICROS (the events table's
-    *                 nanos-as-long `ts` divided by 1000)
+    * @param tsMicros expression yielding epoch MICROS (for the events
+    *                 table, `Q.tsMicros`)
     * @param sortCols secondary sort within each output file, so row-group
     *                 min/max stats are selective for those columns
     */

@@ -464,7 +464,7 @@ object IngestOpQueries {
       (s, d) => {
         val ev = table(s, d, "events").select(
           col("event_type"),
-          expr("ts DIV 1000 DIV 86400000000").as("day_idx"),
+          call_function("div", tsMicros, lit(86400000000L)).as("day_idx"),
           expr("CAST(floor(value / 10) AS BIGINT)").as("vbucket"))
         val combos = ev.groupBy("event_type", "day_idx", "vbucket")
           .agg(count(lit(1)).as("combo_n"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 /** One driver-contract query: a Spark plan over the testdata parquet tables
   * plus an equivalent ANSI/DuckDB oracle (None for ops SQL can't express —
@@ -32,66 +33,41 @@ final case class QueryDef(
 
 object Q {
 
+  /** A warehouse table. `events.ts` is handed on as TIMESTAMP: the
+    * fixtures store it as parquet TIMESTAMP(MICROS) without UTC
+    * adjustment, which reads as TIMESTAMP_NTZ, and it is cast once here,
+    * at the scan boundary. NTZ is interpreted in the session time zone
+    * (always UTC in this engine), which matches DuckDB's naive read of
+    * the same file.
+    */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")
-    if (name == "events") normalizeEventsTs(df) else df
+    if (name == "events" &&
+        df.schema.find(_.name == "ts").exists(_.dataType == TimestampNTZType))
+      df.withColumn("ts", col("ts").cast(TimestampType))
+    else df
   }
 
-  /** The engine's internal encoding for `events.ts` is a LONG of epoch
-    * NANOS, whatever the fixture's physical parquet type:
-    *
-    *  - parquet TIMESTAMP(NANOS) fixtures arrive as that LONG already
-    *    (under `spark.sql.legacy.parquet.nanosAsLong=true`, which
-    *    Verify/Bench/tests still set — a no-op on micros fixtures);
-    *  - parquet TIMESTAMP(MICROS) fixtures (the driver's testdata since
-    *    2026-08-13) arrive as TIMESTAMP / TIMESTAMP_NTZ and are converted
-    *    here, once, at the scan boundary: `unix_micros(ts) * 1000`.
-    *    NTZ is interpreted in the session timezone (always UTC in this
-    *    engine), which matches DuckDB's naive read of the same file.
-    *
-    * Conversion is two codegen'd arithmetic ops per row; keeping one
-    * internal encoding means every downstream operator, memo, and oracle
-    * (all hash-verified against DuckDB on the nanos fixtures in r1–r4)
-    * is unchanged. Epoch nanos overflow a LONG in 2262 — fine here.
+  /** Epoch micros of `ts`, probed from the frame's own schema — for code
+    * paths that do NOT load events through [[table]] (streaming readers
+    * with declared schemas, specs reading the parquet directly). Any `ts`
+    * that is not a timestamp is refused: a LONG could be seconds, micros
+    * or nanos, and guessing would shift every derived time silently.
     */
-  def normalizeEventsTs(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types._
-    df.schema.find(_.name == "ts").map(_.dataType) match {
-      case Some(LongType) => df // legacy nanos-as-long fixtures
-      case Some(TimestampType) =>
-        df.withColumn("ts", unix_micros(col("ts")) * lit(1000L))
-      case Some(TimestampNTZType) =>
-        df.withColumn("ts",
-          unix_micros(col("ts").cast(TimestampType)) * lit(1000L))
-      case _ => df
-    }
-  }
-
-  /** Epoch micros from any physical `ts` encoding, probed from the frame's
-    * own schema — for code paths that do NOT load events through
-    * [[table]] (streaming readers with user schemas, specs reading the
-    * parquet directly). Mirrors [[normalizeEventsTs]] case-for-case.
-    */
-  def tsMicrosOf(df: DataFrame): Column = {
-    import org.apache.spark.sql.types._
+  def tsMicrosOf(df: DataFrame): Column =
     df.schema("ts").dataType match {
-      case LongType => expr("ts DIV 1000")
-      case TimestampType => unix_micros(col("ts"))
+      case TimestampType => tsMicros
       case TimestampNTZType => unix_micros(col("ts").cast(TimestampType))
       case other => throw new IllegalArgumentException(
         s"unsupported events.ts type: $other")
     }
-  }
 
-  /** `ts` (nanos LONG after [[table]] normalization) as epoch micros.
-    * Nanos exceed 2^53: integer division only (double math would lose
-    * micros). Truncation via DIV matches DuckDB's
-    * CAST(TIMESTAMP_NS AS TIMESTAMP) semantics.
-    */
-  val tsMicros: Column = expr("ts DIV 1000")
+  /** `events.ts` (a TIMESTAMP after [[table]]) as epoch micros — what
+    * the oracles compute as `epoch_us(CAST(ts AS TIMESTAMP))`. */
+  val tsMicros: Column = unix_micros(col("ts"))
 
-  /** `ts` as a real (UTC) timestamp column, micro precision. */
-  val tsCol: Column = timestamp_micros(tsMicros)
+  /** `events.ts` as a (UTC) timestamp column, micro precision. */
+  val tsCol: Column = col("ts")
 
   /** Exact integer cents for a non-negative 2-decimal measure. round() is
     * HALF_UP in Spark and half-away-from-zero in DuckDB — identical for the

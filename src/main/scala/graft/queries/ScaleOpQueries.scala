@@ -545,7 +545,7 @@ object ScaleOpQueries {
       (s, d) => {
         val hourly = table(s, d, "events")
           .groupBy(col("event_type"),
-            expr("ts DIV 1000 DIV 3600000000").as("hour_idx"))
+            call_function("div", tsMicros, lit(3600000000L)).as("hour_idx"))
           .agg(count(lit(1)).as("cnt"))
         val slot = hourly
           .groupBy(col("event_type"), (col("hour_idx") % 24).as("hod"))
@@ -588,7 +588,7 @@ object ScaleOpQueries {
       (s, d) => {
         val uh = table(s, d, "events")
           .select(col("user_id"),
-            expr("ts DIV 1000 DIV 3600000000").as("hour"),
+            call_function("div", tsMicros, lit(3600000000L)).as("hour"),
             col("event_type"))
           .distinct()
         val nb = uh.select("user_id", "hour").distinct()

@@ -651,9 +651,10 @@ object SimilarityQueries {
   /** Deterministic single-layer kNN graph (the NSW construction of a
     * graph-ANN index, Malkov et al.'s small-world family): each vector's
     * out-edges are its 6 most-similar neighbors among its LSH-bucket
-    * candidates (4 tables × 4-bit signatures — the same banding as
-    * `dedup_embedding_lsh`), symmetrized before truncation so a popular
-    * hub can be ENTERED from either endpoint of a close pair. Persisted
+    * candidates (the [[lshBands]] table of `dedup_embedding_lsh`: 4
+    * tables × `lshTableBits`-bit signatures), symmetrized before
+    * truncation so a popular hub can be ENTERED from either endpoint of a
+    * close pair. Persisted
     * once per (session, dataset); the beam search below reads it every
     * hop. Scale story: candidate generation is the bucket-key equi-join
     * (never all-pairs), per-node truncation is the native GroupTopK
@@ -669,16 +670,9 @@ object SimilarityQueries {
     */
   private[graft] def nswAdjacency(s: SparkSession, d: String): DataFrame =
     trainedArtifact(s, d, "nsw_adj", version = 1) {
-      graft.functions.LshBits.register(s)
       graft.functions.VectorFunctions.register(s)
-      val b = lshTableBits(s, d)
       val v = table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val tb = v
-        .select(col("vec_id"), expr(s"lsh_bits(embedding, ${4 * b})").as("bits"))
-        .select(col("vec_id"),
-          explode(sequence(lit(0L), lit(3L))).as("t"), col("bits"))
-        .withColumn("bucket", expr(s"(bits >> (t * $b)) & ${(1 << b) - 1}"))
-        .drop("bits")
+      val tb = lshBands(s, d)
       val cand = tb.select(col("vec_id").as("vec_a"), col("t"), col("bucket"))
         .join(tb.select(col("vec_id").as("vec_b"), col("t").as("t_b"),
           col("bucket").as("bucket_b")),
@@ -710,22 +704,7 @@ object SimilarityQueries {
     * the graph-cluster dedup oracles.
     */
   private val NswAdjSql: String =
-    """planes AS (
-      |  SELECT p, dim,
-      |    CASE WHEN instr('02468ace',
-      |      substr(sha256(CAST(p AS VARCHAR) || '-' || CAST(dim AS VARCHAR)), 1, 1)) > 0
-      |      THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS w
-      |  FROM (SELECT unnest(range(0, 16)) AS p),
-      |       (SELECT unnest(range(1, 65)) AS dim)),
-      |comps AS (SELECT vec_id,
-      |    unnest(range(1, len(embedding) + 1)) AS dim,
-      |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 10000) AS BIGINT) AS qx
-      |  FROM embeddings),
-      |proj AS MATERIALIZED (SELECT vec_id, p, CAST(sum(w * qx) AS BIGINT) AS proj
-      |  FROM comps JOIN planes USING (dim) GROUP BY 1, 2),
-      |tb AS MATERIALIZED (SELECT vec_id, p // 4 AS t,
-      |  CAST(sum((CASE WHEN proj > 0 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END) << CAST(p % 4 AS INT)) AS BIGINT) AS bucket
-      |  FROM proj GROUP BY 1, 2),
+    s"""$LshBandsSql,
       |cand AS MATERIALIZED (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
       |  FROM tb a JOIN tb b ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
       |ve AS (SELECT vec_id,

@@ -16,13 +16,11 @@ import org.apache.spark.sql.types._
   */
 object StreamingAnalytics {
 
-  /** The events schema as stored by the CURRENT driver testdata: `ts` is
-    * parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) → TIMESTAMP_NTZ.
-    * Streaming readers require a declared schema, so this one is pinned
-    * to that vintage; to stream a legacy TIMESTAMP(NANOS) fixture, pass
-    * your own schema with `ts: LongType` (under nanosAsLong=true) — every
-    * consumer derives time via [[graft.queries.Q.tsMicrosOf]], which
-    * adapts to whichever `ts` type the DECLARED schema carries.
+  /** The events schema as the fixtures store it: `ts` is parquet
+    * TIMESTAMP(MICROS, isAdjustedToUTC=false) → TIMESTAMP_NTZ. Streaming
+    * readers require a declared schema; a schema declaring `ts` as
+    * TIMESTAMP works too, because every consumer derives time via
+    * [[graft.queries.Q.tsMicrosOf]]. A non-timestamp `ts` is refused.
     */
   val eventsSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),

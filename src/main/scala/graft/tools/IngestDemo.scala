@@ -3,7 +3,6 @@ package graft.tools
 import graft.api.StatusQueries
 import graft.ingest.IngestPipeline
 import graft.ledger.LedgerStore
-import org.apache.spark.sql.SparkSession
 
 /** End-to-end drive of the ingest engine over a fixture inbox directory.
   *
@@ -19,13 +18,7 @@ object IngestDemo {
     val inbox = args(0)
     val work = args(1)
     val passes = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ingest-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.session(graft.GraftSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val store = new LedgerStore(spark, s"$work/ledger")

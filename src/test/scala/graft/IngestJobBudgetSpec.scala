@@ -30,11 +30,11 @@ class IngestJobBudgetSpec extends SparkSpec {
     }
     val sc = spark.sparkContext
     GraftInternal.drainListenerBus(spark, 10000L)
-    val persisted = sc.getPersistentRDDs.size
+    val before = persistedIds()
     sc.addSparkListener(listener)
     try { body; GraftInternal.drainListenerBus(spark, 10000L) }
     finally sc.removeSparkListener(listener)
-    (jobs.get, sc.getPersistentRDDs.size - persisted)
+    (jobs.get, persistedSince(before))
   }
 
   /** A pipeline on a ledger holding one pass over `first.csv`, rewritten

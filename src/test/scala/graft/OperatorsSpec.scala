@@ -304,7 +304,7 @@ class OperatorsSpec extends SparkSpec {
     // the intervals cover every event: each event's type matches its
     // enclosing version's type (spot-check via as-of semantics)
     val ev = graft.queries.Q.table(spark, dir, "events")
-      .select($"user_id", expr("ts DIV 1000").as("us"), $"event_id",
+      .select($"user_id", graft.queries.Q.tsMicros.as("us"), $"event_id",
         $"event_type").as[(Long, Long, Long, String)].collect()
     val byUser = out.map { case (u, rs) => u -> rs.sortBy(_._3) }
     ev.groupBy(_._1).foreach { case (user, events) =>

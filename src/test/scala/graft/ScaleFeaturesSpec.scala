@@ -210,7 +210,8 @@ class ScaleFeaturesSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val ev = Q.table(spark, dir, "events")
       .filter(col("event_type").isin("view", "purchase"))
-      .select(col("user_id"), expr("ts DIV 1000 DIV 86400000000").as("day"),
+      .select(col("user_id"),
+        call_function("div", Q.tsMicros, lit(86400000000L)).as("day"),
         col("event_type"), round(col("value") * 100).cast("long").as("v_c"))
     def side(t: String) = ev.filter(col("event_type") === t)
       .select(col("user_id"), col("day"), col("v_c"))

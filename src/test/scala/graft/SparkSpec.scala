@@ -3,18 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites. */
+/** Shared local session for all suites: four cores and four shuffle
+  * partitions whatever the host, so task counts asserted by the specs do
+  * not move with it. */
 object TestSpark {
-  lazy val spark: SparkSession = GraftSession.tuned(SparkSession.builder())
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // Legacy-fixture compat (old nanos events.parquet); no-op on current
-    // TIMESTAMP(MICROS) testdata — Q.normalizeEventsTs adapts per schema
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    GraftSession.session(shufflePartitions = 4, master = "local[4]")
 }
 
 trait SparkSpec extends AnyFunSuite
@@ -22,6 +16,15 @@ trait SparkSpec extends AnyFunSuite
   lazy val spark: SparkSession = TestSpark.spark
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  def persistedIds(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** RDDs persisted now that were not at `before`. Counted by id, not by
+    * map size: the context holds persisted RDDs weakly, so an earlier
+    * suite's unreachable RDD can leave the map mid-test. */
+  def persistedSince(before: Set[Int]): Int =
+    (persistedIds() -- before).size
 
   /** Suites share one session: release this suite's memoized persisted
     * intermediates when it finishes, so a full `sbt test` run doesn't

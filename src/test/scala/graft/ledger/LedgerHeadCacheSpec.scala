@@ -27,15 +27,6 @@ class LedgerHeadCacheSpec extends SparkSpec {
   private def servedFromCache(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.isInstanceOf[InMemoryRelation]
 
-  private def persistedIds(): Set[Int] =
-    spark.sparkContext.getPersistentRDDs.keySet.toSet
-
-  /** RDDs persisted now that were not at `before`. Counted by id, not by
-    * map size: the context holds persisted RDDs weakly, so an earlier
-    * suite's unreachable RDD can leave the map mid-test. */
-  private def persistedSince(before: Set[Int]): Int =
-    (persistedIds() -- before).size
-
   test("after every kind of publish, read() equals the uncached readAt(head)") {
     val store = new LedgerStore(spark, tmpDir("head-ledger"), compactEvery = 3)
     var reread = false // has some chain of this ledger been read twice?

@@ -8,12 +8,13 @@ Rows are flagged when steady-state time (total - build - train, where
 build/train are this sweep's first-payer shares) exceeds threshold x
 the floor AND the larger time is at least min_sec.
 """
-import json, sys
+import json, os, sys
 
 sweep = json.loads(open(sys.argv[1]).read())
 thr = float(sys.argv[2]) if len(sys.argv) > 2 else 2.0
 min_sec = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
-base = json.load(open("/root/repo/BASELINE_QUERIES.json"))["queries"]
+base = json.load(open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                            "..", "BASELINE_QUERIES.json")))["queries"]
 
 # Mechanized window normalization: round_close brackets the med-3 sweep
 # with the graft.Calibrate battery and writes the resulting factor into

@@ -65,6 +65,15 @@ def main():
             spill[k] = [round(d, 1), round(mm, 1)]
     sets = {sn: round(med([s["sets"].get(sn, 0.0) for s in sweeps]), 3)
             for sn in sweeps[0].get("sets", {})}
+    # per-query Spark job/stage/task counts (median over the sweeps that
+    # carry them; older records have none)
+    counts = {}
+    for key in ("jobs", "stages", "tasks"):
+        counts[key] = {}
+        for k in names:
+            vals = [s[key][k] for s in sweeps if k in s.get(key, {})]
+            if vals:
+                counts[key][k] = med(vals)
 
     rec = {
         "metric": "total",
@@ -77,6 +86,7 @@ def main():
         "build": build,
         "shuffle_mb": shuffle,
         "spill_mb": spill,
+        **counts,
         "shuffle_total_mb": round(sum(shuffle.values()), 1),
         "spill_disk_total_mb": round(sum(v[0] for v in spill.values()), 1),
         "sets": sets,

@@ -23,7 +23,7 @@
 #   SPARK_GRAFT_SKIP_MED3=1   skip step 4 (iterating on steps 1-3)
 #   SPARK_GRAFT_SKIP_CURVES=1 skip step 3
 set -euo pipefail
-cd /root/repo
+cd "$(dirname "${BASH_SOURCE[0]}")/.."
 
 LOGS="${SPARK_GRAFT_LOGS:-target/scaling/logs}"
 SETS="${SPARK_GRAFT_SETS:-dedup,similarity,text,scaleops,ir}"

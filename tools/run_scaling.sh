@@ -20,7 +20,7 @@
 # buffer). Pin SPARK_GRAFT_SHUFFLE_PARTITIONS to reproduce the old
 # fixed-width behavior.
 set -euo pipefail
-cd /root/repo
+cd "$(dirname "${BASH_SOURCE[0]}")/.."
 
 FIX="${SPARK_GRAFT_FIX:-target/scaling/fixtures}"
 LOGS="${SPARK_GRAFT_LOGS:-target/scaling/logs}"
