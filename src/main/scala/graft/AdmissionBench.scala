@@ -119,21 +119,11 @@ object AdmissionBench {
             s"($nVec vectors, ${if (k > flatKMax) "tree" else "flat"})")
           val t0 = System.nanoTime()
           // trainCoarse is eager (each Lloyd round localizes its
-          // centroids), so this wall IS the offline build cost — the
-          // number the flat-vs-tree A/B compares
+          // centroids), so this wall IS the offline build cost
           val cb = graft.streaming.SemanticAdmitter.trainCoarse(spark, v,
             k = k, iters = 2, sampleEvery = 4)
           System.err.println(f"[admission] quantizer build " +
             f"${(System.nanoTime() - t0) / 1e9}%.1fs")
-          // SPARK_GRAFT_BUILD_ONLY=1: stop after the build wall prints.
-          // The flat-vs-tree A/B compares ONLY that number; the full-
-          // corpus list assignment and the admission batches that follow
-          // are identical across arms and (flat, k=√n) cost tens of
-          // minutes per run — paying them would just stretch the window
-          // the interleaving is trying to keep tight.
-          if (sys.env.contains("SPARK_GRAFT_BUILD_ONLY")) {
-            spark.stop(); sys.exit(0)
-          }
           val cm = IvfCodebook.comps(v)
           val asg = graft.streaming.SemanticAdmitter.assignCoarse(
             cm, IvfCodebook.norms(cm), cb)

@@ -20,6 +20,9 @@ import org.apache.spark.sql.SparkSession
   *  - **checkpoint file GC**: reliable-checkpoint files (the memo
   *    lineage-truncation path in [[graft.queries.Q.cached]]) are deleted
   *    when their RDD is collected, not held until application end.
+  *  - **the native SQL functions** of [[GraftExtensions.functions]],
+  *    injected through `withExtensions`, so the session and every
+  *    `newSession()` clone of it resolve them with no register call.
   */
 object GraftSession {
   val ioCodec = "zstd"
@@ -27,6 +30,7 @@ object GraftSession {
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.io.compression.codec", ioCodec)
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+      .withExtensions(GraftExtensions.injectFunctions)
 
   /** `local[n]` width: `SPARK_GRAFT_CPUS`, else the processors this JVM
     * sees. */

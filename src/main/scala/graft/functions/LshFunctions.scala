@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -98,14 +97,4 @@ object LshBits {
     }
     bits
   }
-
-  /** Make `lsh_bits(embedding, nPlanes)` usable from SQL in `spark`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_bits",
-      { exprs =>
-        require(exprs.length == 2, "lsh_bits(embedding, nPlanes)")
-        LshBits(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue())
-      },
-      "built-in")
 }

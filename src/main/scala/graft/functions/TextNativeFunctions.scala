@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -111,18 +110,6 @@ object WinnowFingerprints {
     }
     new GenericArrayData(out)
   }
-
-  /** Make `winnow_fps(text, n_win, k, w)` usable from SQL in `spark`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fps",
-      { exprs =>
-        require(exprs.length == 4, "winnow_fps(text, n_win, k, w)")
-        WinnowFingerprints(exprs(0), exprs(1),
-          exprs(2).eval().asInstanceOf[Number].intValue(),
-          exprs(3).eval().asInstanceOf[Number].intValue())
-      },
-      "built-in")
 }
 
 /** Native Catalyst expression: the 16 MinHash signature pieces of one
@@ -223,16 +210,6 @@ object MinhashSigs {
     }
     new GenericArrayData(out)
   }
-
-  /** Make `minhash_sigs(text)` usable from SQL in `spark`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sigs",
-      { exprs =>
-        require(exprs.length == 1, "minhash_sigs(text)")
-        MinhashSigs(exprs(0))
-      },
-      "built-in")
 }
 
 /** Native Catalyst expression: the SimHash signature of one document in a
@@ -329,27 +306,6 @@ object SimhashBits {
     var b = 0
     while (b < nBits) { if (votes(b) > 0) sim |= 1L << b; b += 1 }
     sim
-  }
-
-  /** Make `simhash_bits(text, hex_digits)` and the block-selecting
-    * `simhash_bits_block(text, hex_digits, block)` usable from SQL in
-    * `spark`. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_bits",
-      { exprs =>
-        require(exprs.length == 2, "simhash_bits(text, hex_digits)")
-        SimhashBits(exprs(0), exprs(1))
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_bits_block",
-      { exprs =>
-        require(exprs.length == 3,
-          "simhash_bits_block(text, hex_digits, block)")
-        SimhashBitsBlock(exprs(0), exprs(1), exprs(2))
-      },
-      "built-in")
   }
 }
 

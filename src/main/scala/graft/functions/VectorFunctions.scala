@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -154,20 +153,4 @@ case class QuantizedCosine(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-/** Registration + SQL exposure of the engine's native expressions. */
-object VectorFunctions {
-
-  /** Make `cosine_sim` / `quant_cosine_sim` usable from SQL in `spark`. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      { exprs => CosineSimilarity(exprs(0), exprs(1)) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "quant_cosine_sim",
-      { exprs => QuantizedCosine(exprs(0), exprs(1)) },
-      "built-in")
-  }
 }

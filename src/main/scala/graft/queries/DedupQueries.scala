@@ -159,7 +159,6 @@ object DedupQueries {
     */
   private def simhashBits(s: org.apache.spark.sql.SparkSession, d: String,
       hexDigits: Int): org.apache.spark.sql.DataFrame = {
-    graft.functions.SimhashBits.register(s)
     table(s, d, "documents")
       .select(col("doc_id"),
         expr(s"simhash_bits(text, $hexDigits)").as("simhash"))
@@ -216,7 +215,6 @@ object DedupQueries {
   private def simhashBands(s: org.apache.spark.sql.SparkSession,
       d: String, nTables: Int): org.apache.spark.sql.DataFrame = {
     val w = simhashBandBits(s, d)
-    graft.functions.SimhashBits.register(s)
     val mask = (1 << w) - 1
     val bands0 = simhashSigs(s, d).select(col("doc_id"),
         explode(sequence(lit(0), lit(3))).as("b"), col("simhash"))
@@ -270,7 +268,6 @@ object DedupQueries {
   private def minhashBands(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     cached(s, d, "minhash_bands") {
-      graft.functions.MinhashSigs.register(s)
       // one row per doc — persisted so band derivation does not re-run the
       // digest loop per consumer
       val mh = cached(s, d, "minhash_sigs") {

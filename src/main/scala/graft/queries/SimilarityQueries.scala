@@ -103,9 +103,9 @@ object SimilarityQueries {
     * per-list population is n/k and pair work k·(n/k)², so k must grow
     * with n — the 10x scaling sweep measured the fixed-16-list version at
     * 25x growth against 10x data. At the standard fixtures (500–2000
-    * vectors) this resolves to exactly 16 lists, so the static
-    * lloydCtes(16, …) DuckDB oracles are bit-identical to the pre-dial
-    * behavior. The OTHER cost this dial raises is training itself
+    * vectors) this resolves to exactly 16 lists; the flat-path DuckDB
+    * oracles seed the same count ([[IvfDialSql]]). The OTHER cost this
+    * dial raises is training itself
     * (O(sample·k·d) per Lloyd iteration = O(n²) once k ∝ n) — acceptable
     * through ~10⁶ vectors on a sampled train; past that the production
     * construction is hierarchical (two-level IMI-style) coarse
@@ -115,6 +115,13 @@ object SimilarityQueries {
     val n = java.lang.Long.parseLong(embKey(s, d).split("-")(0), 16)
     math.max(16L, n / 125).toInt
   }
+
+  /** DuckDB rendering of [[ivfLists]]: `ivf_dial(k)`, the list count from
+    * the embeddings row count with the same integer formula, so the
+    * flat-path Lloyd replays ([[lloydCtes]]) seed as many lists as the
+    * engine trains (twin of [[LshDialSql]]). */
+  private val IvfDialSql: String =
+    "ivf_dial AS MATERIALIZED (SELECT greatest(16, count(*) // 125) AS k FROM embeddings)"
 
   /** Past this list count the coarse quantizer trains and assigns
     * HIERARCHICALLY (two-level, IMI-style — IvfCodebook.trainChildren /
@@ -336,10 +343,10 @@ object SimilarityQueries {
 
   /** DuckDB CTE prefix ending in `assign(vec_id, list_id)` — the oracle
     * form of [[sharedAssignment]], exposed for cross-file oracles. Keep
-    * in lockstep with the Lloyd parameters above (k=16, 2 iters, 1-in-4
-    * sample). */
+    * in lockstep with the Lloyd parameters above (k = [[ivfLists]], 2
+    * iters, 1-in-4 sample). */
   private[queries] lazy val AssignCtesSql: String =
-    s"""${lloydCtes(16, 2, 4)},
+    s"""${lloydCtes(2, 4)},
        |assign AS (SELECT vec_id, cent_id AS list_id FROM r2 WHERE rn = 1)""".stripMargin
 
   /** Product-quantization codebooks: the 64-dim space split into 4
@@ -574,7 +581,6 @@ object SimilarityQueries {
     * exact quantized cosine ≥ 0.4.
     */
   private def embeddingCosine(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val v = table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
     val a = v.filter(col("vec_id") < 128)
       .select(col("vec_id").as("vec_a"), col("embedding").as("ea"))
@@ -605,7 +611,6 @@ object SimilarityQueries {
     * buckets, shared by the candidate join and the occupancy histogram.
     */
   private def lshBands(s: SparkSession, d: String): DataFrame = {
-    graft.functions.LshBits.register(s)
     val b = lshTableBits(s, d)
     table(s, d, "embeddings")
       .select(col("vec_id"), expr(s"lsh_bits(embedding, ${4 * b})").as("bits"))
@@ -631,7 +636,6 @@ object SimilarityQueries {
     */
   private def cosineVerify(s: SparkSession, d: String,
       cand: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val v = table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
     cand
       .join(v.select(col("vec_id").as("vec_a"), col("embedding").as("ea")), "vec_a")
@@ -670,7 +674,6 @@ object SimilarityQueries {
     */
   private[graft] def nswAdjacency(s: SparkSession, d: String): DataFrame =
     trainedArtifact(s, d, "nsw_adj", version = 1) {
-      graft.functions.VectorFunctions.register(s)
       val v = table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       val tb = lshBands(s, d)
       val cand = tb.select(col("vec_id").as("vec_a"), col("t"), col("bucket"))
@@ -729,10 +732,12 @@ object SimilarityQueries {
     * integer sums, argmax by exact-integer cosine with cent_id tiebreak,
     * empty lists keep their centroid). Ends with `r<iters>` = the ranked
     * similarities against the FINAL centroids, ready for assignment
-    * (`rn = 1`) and probing (`rn <= nprobe`).
+    * (`rn = 1`) and probing (`rn <= nprobe`). The flat-path replay: k is
+    * the engine's list count, read from [[IvfDialSql]].
     */
-  private def lloydCtes(k: Int, iters: Int, sampleEvery: Int): String =
-    lloydCtesFor("", "embeddings", k, iters, sampleEvery)
+  private def lloydCtes(iters: Int, sampleEvery: Int): String =
+    s"$IvfDialSql,\n" +
+      lloydCtesFor("", "embeddings", "(SELECT k FROM ivf_dial)", iters, sampleEvery)
 
   /** IMI CONTRACT parameters: a FORCED k = 72 (> FlatKMax) on the
     * standard fixture, so the two-level trainChildren / assignTwoLevel
@@ -958,9 +963,10 @@ object SimilarityQueries {
   /** [[lloydCtes]] generalized for product quantization: every CTE name
     * carries `pfx` so several independent Lloyd chains (one per PQ
     * subspace, each over a SLICED embedding relation `srcRel`) can share
-    * one WITH clause without colliding.
+    * one WITH clause without colliding. `k` is the seed count as a SQL
+    * expression: a constant, or a scalar subquery on a dial CTE.
     */
-  private def lloydCtesFor(pfx: String, srcRel: String, k: Int, iters: Int,
+  private def lloydCtesFor(pfx: String, srcRel: String, k: String, iters: Int,
       sampleEvery: Int): String = {
     // Every CTE is MATERIALIZED: downstream suffixes (imiCtes, probe/assign
     // stages) reference these names repeatedly, and DuckDB inlines plain
@@ -1020,7 +1026,6 @@ object SimilarityQueries {
     * probe-bounded plan (`contrastiveProbePairs`) is audited against,
     * the same discipline as `ann_recall_audit`'s exact fixture. */
   private def contrastiveExactPairs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val v = table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
     val va = corpusAssignment(s, d).join(v, "vec_id")
     val anchors = va.filter(col("vec_id") < ContrastiveAnchors)
@@ -1056,7 +1061,6 @@ object SimilarityQueries {
     * negative set is approximate; `corpus_contrastive_recall` measures it. */
   private def contrastiveProbePairs(s: SparkSession, d: String): DataFrame = {
     import graft.operators.IvfCodebook
-    graft.functions.VectorFunctions.register(s)
     val v = table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
     val asg = corpusAssignment(s, d)
     val anchors = v.filter(col("vec_id") < ContrastiveAnchors)
@@ -1120,7 +1124,6 @@ object SimilarityQueries {
     // chain the oracle runs, ~6x faster — one fused codegen loop per pair).
     QueryDef("ann_cosine_topk",
       (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val v = table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
         val q = v.filter(col("vec_id") < 5)
           .select(col("vec_id").as("query_id"), col("embedding").as("qq"))
@@ -1163,7 +1166,6 @@ object SimilarityQueries {
     // still pins it against the 1e-4-quantized twin).
     QueryDef("ann_cosine_native",
       (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val v = table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
         val q = v.filter(col("vec_id") < 5)
           .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
@@ -1254,7 +1256,6 @@ object SimilarityQueries {
     QueryDef("ann_ivf_topk",
       (s, d) => {
         import graft.operators.IvfCodebook
-        graft.functions.VectorFunctions.register(s)
         val v = table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
         val cm = IvfCodebook.comps(v)
         val nm = IvfCodebook.norms(cm)
@@ -1284,7 +1285,7 @@ object SimilarityQueries {
             row_number().over(wRank).cast("long").as("rank"))
           .filter(col("rank") <= 10)
       },
-      Some(s"""WITH ${lloydCtes(16, 2, 4)},
+      Some(s"""WITH ${lloydCtes(2, 4)},
         |assign AS (SELECT vec_id, cent_id AS list_id FROM r2 WHERE rn = 1),
         |probe AS (SELECT vec_id AS query_id, cent_id AS list_id
         |  FROM r2 WHERE vec_id < 5 AND rn <= 4),
@@ -1413,7 +1414,7 @@ object SimilarityQueries {
           .select(col("list_id"), col("n_vectors"), col("min_vec"),
             expr("CAST((n_vectors * 1000) DIV n_total AS BIGINT)").as("share_pm"))
       },
-      Some(s"""WITH ${lloydCtes(16, 2, 4)},
+      Some(s"""WITH ${lloydCtes(2, 4)},
         |assign AS (SELECT vec_id, cent_id AS list_id FROM r2 WHERE rn = 1),
         |tot AS (SELECT count(*) AS n_total FROM embeddings)
         |SELECT list_id, count(*) AS n_vectors, min(vec_id) AS min_vec,
@@ -1452,7 +1453,7 @@ object SimilarityQueries {
           .groupBy("list_id")
           .agg(count(lit(1)).as("n_vectors"), min(col("vec_id")).as("min_vec"))
       },
-      Some(s"""WITH ${lloydCtesFor("sup", "embeddings", ImiK1, 2, 4)},
+      Some(s"""WITH ${lloydCtesFor("sup", "embeddings", s"$ImiK1", 2, 4)},
         |${imiCtes(ImiK2, 2, 4)}
         |SELECT list_id, CAST(count(*) AS BIGINT) AS n_vectors,
         |  min(vec_id) AS min_vec
@@ -1490,7 +1491,7 @@ object SimilarityQueries {
           .groupBy("list_id")
           .agg(count(lit(1)).as("n_vectors"), min(col("vec_id")).as("min_vec"))
       },
-      Some(s"""WITH ${lloydCtesFor("sup", "embeddings", Imi3K1, 2, 4)},
+      Some(s"""WITH ${lloydCtesFor("sup", "embeddings", s"$Imi3K1", 2, 4)},
         |${imiCtes(Imi3K2, 2, 4)},
         |${imi3Ctes(Imi3K3, 2, 4)}
         |SELECT list_id, CAST(count(*) AS BIGINT) AS n_vectors,
@@ -1514,7 +1515,6 @@ object SimilarityQueries {
     // two kept vectors in the same list are similar.
     QueryDef("dedup_semantic",
       (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val v = table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
         val asg = corpusAssignment(s, d)
         val a = asg.join(v, "vec_id")
@@ -1533,7 +1533,7 @@ object SimilarityQueries {
             when(col("hit").isNull, 1L).otherwise(0L)
               .cast("long").as("kept"))
       },
-      Some(s"""WITH ${lloydCtes(16, 2, 4)},
+      Some(s"""WITH ${lloydCtes(2, 4)},
         |assign AS (SELECT vec_id, cent_id AS list_id FROM r2 WHERE rn = 1),
         |v AS (SELECT vec_id,
         |  list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS qe
@@ -1567,7 +1567,6 @@ object SimilarityQueries {
     // codebook dial (lists, iters, sample) changes.
     QueryDef("dedup_semantic_recall",
       (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val v = table(s, d, "embeddings")
           .select(col("vec_id"), col("embedding"))
         val anchors = v.filter(col("vec_id") < 64)
@@ -1591,7 +1590,7 @@ object SimilarityQueries {
               .otherwise(col("found").cast("double") /
                 col("total_true").cast("double")).as("recall"))
       },
-      Some(s"""WITH ${lloydCtes(16, 2, 4)},
+      Some(s"""WITH ${lloydCtes(2, 4)},
         |assign AS (SELECT vec_id, cent_id AS list_id FROM r2 WHERE rn = 1),
         |v AS (SELECT vec_id,
         |  list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS qe
@@ -1627,7 +1626,7 @@ object SimilarityQueries {
     // audit between them is `corpus_contrastive_recall`.
     QueryDef("corpus_contrastive_pairs",
       (s, d) => contrastiveExactPairs(s, d),
-      Some(s"""WITH ${lloydCtes(16, 2, 4)},
+      Some(s"""WITH ${lloydCtes(2, 4)},
         |assign AS (SELECT vec_id, cent_id AS list_id FROM r2 WHERE rn = 1),
         |v AS (SELECT vec_id,
         |  list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS qe
@@ -1662,7 +1661,7 @@ object SimilarityQueries {
     // probe ranking, and the bounded re-rank.
     QueryDef("corpus_contrastive_probe",
       (s, d) => contrastiveProbePairs(s, d),
-      Some(s"""WITH ${lloydCtes(16, 2, 4)},
+      Some(s"""WITH ${lloydCtes(2, 4)},
         |assign AS (SELECT vec_id, cent_id AS list_id FROM r2 WHERE rn = 1),
         |probe AS (SELECT vec_id AS anchor_id, cent_id AS list_id
         |  FROM r2 WHERE vec_id < $ContrastiveAnchors AND rn <= $ContrastiveNprobe
@@ -1714,7 +1713,7 @@ object SimilarityQueries {
               .otherwise(col("found").cast("double") /
                 col("total_true").cast("double")).as("recall"))
       },
-      Some(s"""WITH ${lloydCtes(16, 2, 4)},
+      Some(s"""WITH ${lloydCtes(2, 4)},
         |assign AS (SELECT vec_id, cent_id AS list_id FROM r2 WHERE rn = 1),
         |v AS (SELECT vec_id,
         |  list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS qe
@@ -1764,7 +1763,6 @@ object SimilarityQueries {
     // bucket are each other's ANN candidates.
     QueryDef("ann_lsh_buckets",
       (s, d) => {
-        graft.functions.LshBits.register(s)
         table(s, d, "embeddings")
           .select(col("vec_id"), expr("lsh_bits(embedding, 8)").as("bucket"))
       },
@@ -1786,7 +1784,6 @@ object SimilarityQueries {
     QueryDef("ann_graph_topk",
       (s, d) => {
         import org.apache.spark.sql.DataFrame
-        graft.functions.VectorFunctions.register(s)
         val v = table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
         val adj = nswAdjacency(s, d)
         val queries = v.filter(col("vec_id") < 5)
@@ -2110,7 +2107,6 @@ object SimilarityQueries {
     // tiebreaks on vec_id.
     QueryDef("ann_pq_topk",
       (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val v = table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
         val codes = pqCodes(s, d)
         val cb = pqCodebooks(s, d)
@@ -2217,7 +2213,6 @@ object SimilarityQueries {
     // lookups + 20 exact dots, vs |corpus| exact dots brute-force.
     QueryDef("ann_ivfpq_topk",
       (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val v = table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
         val probe = probeLists(s, d, nprobe = 4)
         val cand = broadcast(probe).join(corpusAssignment(s, d), "list_id")
@@ -2266,7 +2261,7 @@ object SimilarityQueries {
             row_number().over(wRank).cast("long").as("rank"))
           .filter(col("rank") <= 10)
       },
-      Some(s"""WITH ${lloydCtes(16, 2, 4)},
+      Some(s"""WITH ${lloydCtes(2, 4)},
         |probe AS (SELECT vec_id AS query_id, cent_id AS list_id
         |  FROM r2 WHERE vec_id < 5 AND rn <= 4),
         |assign AS (SELECT vec_id, cent_id AS list_id FROM r2 WHERE rn = 1),
@@ -2531,7 +2526,6 @@ object SimilarityQueries {
     // 5-round DuckDB replay agrees bit-for-bit.
     QueryDef("ann_mmr_rerank",
       (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val cand = cached(s, d, "mmr_cand") {
           val v = table(s, d, "embeddings")
             .select(col("vec_id"), col("embedding"))
@@ -2626,6 +2620,6 @@ object SimilarityQueries {
       val lo = m * PqSubDims + 1; val hi = (m + 1) * PqSubDims
       lloydCtesFor(s"p${m}_",
         s"(SELECT vec_id, embedding[$lo:$hi] AS embedding FROM embeddings)",
-        k = 16, iters = 2, sampleEvery = 4)
+        k = "16", iters = 2, sampleEvery = 4)
     }.mkString(",\n")
 }

@@ -241,7 +241,6 @@ object TextQueries {
   private[queries] def winnowFps(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     cached(s, d, "winnow_fps") {
-      graft.functions.WinnowFingerprints.register(s)
       val k = 8; val w = 4; val b = 4096 // window-starts per block
       table(s, d, "documents")
         .filter(length(col("text")) >= k + w - 1)

@@ -214,7 +214,6 @@ object StreamingDedup {
     * yield no bands (they can only be exact-matched).
     */
   private def docBands(spark: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.MinhashSigs.register(spark)
     val mh = docs
       .select(col("doc_id"), substring(col("text"), 1, 200).as("t"))
       .select(col("doc_id"), expr("minhash_sigs(t)").as("mhs"))
@@ -382,7 +381,6 @@ object StreamingDedup {
       outputPartitions: Int = DefaultOutputPartitions,
       evidenceBatches: Option[Seq[Long]] = None): Long =
       releasingCheckpoints { ckpt =>
-    graft.functions.VectorFunctions.register(spark)
     // checkpoint the batch EAGERLY (see [[processBatch]]): it feeds the
     // in-batch self-join twice, the broadcast probe subjob, and the
     // admitted plan — four source re-reads per trigger without

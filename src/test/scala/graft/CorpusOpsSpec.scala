@@ -67,7 +67,6 @@ class CorpusOpsSpec extends SparkSpec {
     }
     // survivor property: no two KEPT vectors in one list are similar —
     // the larger of such a pair would have been dropped
-    graft.functions.VectorFunctions.register(spark)
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val keptDf = out.filter(_._3 == 1L).map(v => (v._1, v._2)).toSeq
       .toDF("vec_id", "list_id").join(emb, "vec_id")

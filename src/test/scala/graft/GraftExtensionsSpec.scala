@@ -1,14 +1,44 @@
 package graft
 
-import org.apache.spark.sql.{GraftExtensionsProbe, SparkSessionExtensions}
+import org.apache.spark.sql.{GraftExtensionsProbe, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 /** The one-stop extension entry point: both the plugin path
   * (spark.sql.extensions=graft.GraftExtensions) and the runtime install
-  * must expose every native expression and the GroupTopK strategy.
+  * must expose every native expression and the GroupTopK strategy, and
+  * a session built by `GraftSession` carries the native functions from
+  * the start.
   */
 class GraftExtensionsSpec extends SparkSpec {
   import spark.implicits._
+
+  private val nativeFunctions = Seq("cosine_sim", "quant_cosine_sim",
+    "lsh_bits", "winnow_fps", "minhash_sigs", "simhash_bits",
+    "simhash_bits_block")
+
+  /** Every native function answers from SQL in `s`. */
+  private def assertResolvesAll(s: SparkSession): Unit = {
+    import s.implicits._
+    val row = Seq(("hello world hello spark", Array(1f, 0f), Array(1f, 0f)))
+      .toDF("t", "a", "b")
+      .selectExpr(
+        "cosine_sim(a, b) AS cs",
+        "quant_cosine_sim(a, b) AS qcs",
+        "lsh_bits(a, 2) AS lb",
+        "size(winnow_fps(t, 3, 4, 2)) AS wf",
+        "size(minhash_sigs(t)) AS mh",
+        "simhash_bits(t, 4) AS sh",
+        "simhash_bits_block(t, 4, 0) AS shb")
+      .collect().head
+    assert(row.getAs[Double]("cs") == 1.0)
+    assert(row.getAs[Double]("qcs") == 1.0)
+    assert(row.getAs[Int]("wf") > 0)
+    assert(row.getAs[Int]("mh") == 16)
+    assert(row.getAs[Long]("sh") >= 0L)
+    // block 0 is bit-identical to simhash_bits
+    assert(row.getAs[Long]("shb") == row.getAs[Long]("sh"))
+  }
 
   test("install() exposes every native function and the topk strategy") {
     // an isolated session: install() now also attaches the optimizer
@@ -18,21 +48,7 @@ class GraftExtensionsSpec extends SparkSpec {
     GraftExtensions.install(s)
     import s.implicits._
     // each native expression answers from SQL with no per-object register
-    val row = Seq(("hello world hello spark", Array(1f, 0f), Array(1f, 0f)))
-      .toDF("t", "a", "b")
-      .selectExpr(
-        "cosine_sim(a, b) AS cs",
-        "quant_cosine_sim(a, b) AS qcs",
-        "lsh_bits(a, 2) AS lb",
-        "size(winnow_fps(t, 3, 4, 2)) AS wf",
-        "size(minhash_sigs(t)) AS mh",
-        "simhash_bits(t, 4) AS sh")
-      .collect().head
-    assert(row.getAs[Double]("cs") == 1.0)
-    assert(row.getAs[Double]("qcs") == 1.0)
-    assert(row.getAs[Int]("wf") > 0)
-    assert(row.getAs[Int]("mh") == 16)
-    assert(row.getAs[Long]("sh") >= 0L)
+    assertResolvesAll(s)
     // idempotent
     GraftExtensions.install(s)
     assert(s.experimental.extraStrategies
@@ -48,6 +64,17 @@ class GraftExtensionsSpec extends SparkSpec {
       == Set((1L, 7.0), (2L, 3.0)))
   }
 
+  test("install() registers only the functions a session does not resolve") {
+    val s = spark.newSession()
+    val registry = s.sessionState.functionRegistry
+    val dropped = FunctionIdentifier("cosine_sim")
+    val kept = registry.lookupFunction(FunctionIdentifier("lsh_bits")).get
+    assert(registry.dropFunction(dropped))
+    GraftExtensions.install(s)
+    assert(registry.functionExists(dropped))
+    assert(registry.lookupFunction(FunctionIdentifier("lsh_bits")).get eq kept)
+  }
+
   test("the plugin path injects the same functions, strategy, and rewrite") {
     val ext = new SparkSessionExtensions
     new GraftExtensions()(ext)
@@ -56,9 +83,30 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(GraftExtensionsProbe.optimizerRules(ext, spark)
       .contains(graft.plans.WindowTopKRewrite))
     val names = GraftExtensionsProbe.injectedFunctionNames(ext).toSet
-    Seq("cosine_sim", "quant_cosine_sim", "lsh_bits", "winnow_fps",
-      "minhash_sigs", "simhash_bits").foreach { f =>
+    nativeFunctions.foreach { f =>
       assert(names.contains(f), s"$f not injected by the plugin path")
+    }
+  }
+
+  test("a GraftSession session and its clones resolve every native function") {
+    assertResolvesAll(spark)
+    assertResolvesAll(spark.newSession())
+  }
+
+  test("running the banded dedup queries twice replaces no native function") {
+    val dir = tmpDir("native-fns")
+    (0 until 40).map(i => (i.toLong, (1 to 30).map(j => s"w${i % 7}x$j").mkString(" ")))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val registry = spark.sessionState.functionRegistry
+    def infos() = nativeFunctions.map(f =>
+      f -> registry.lookupFunction(FunctionIdentifier(f)))
+    val before = infos()
+    before.foreach { case (f, info) => assert(info.isDefined, s"$f missing") }
+    for (_ <- 1 to 2; q <- Seq("dedup_simhash_pairs", "dedup_minhash_lsh"))
+      SparkEntry.queries(q)(spark, dir).count()
+    graft.queries.Q.release(spark)
+    before.zip(infos()).foreach { case ((f, was), (_, now)) =>
+      assert(was.get eq now.get, s"$f was replaced in the session's registry")
     }
   }
 

@@ -27,7 +27,6 @@ class GraphAnnSpec extends SparkSpec {
   }
 
   test("graph search recall vs exact brute-force top-10 is usable") {
-    graft.functions.VectorFunctions.register(spark)
     val v = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val q = v.filter(col("vec_id") < 5)

@@ -264,7 +264,6 @@ class StreamingDedupSpec extends SparkSpec {
     val admittedNear = spark.read.parquet(s"$root/out")
       .select("doc_id", "text").as[(Long, String)].collect().toMap
     assert(admittedNear == Map(2L -> long))
-    graft.functions.MinhashSigs.register(spark)
     val expectedBands = Seq(2L -> long).toDF("doc_id", "text")
       .select(col("doc_id"), substring(col("text"), 1, 200).as("t"))
       .select(col("doc_id"), expr("minhash_sigs(t)").as("mhs"))

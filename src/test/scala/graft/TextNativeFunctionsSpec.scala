@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.WinnowFingerprints
 import java.security.MessageDigest
 import org.apache.spark.sql.functions._
 
@@ -28,7 +27,6 @@ class TextNativeFunctionsSpec extends SparkSpec {
 
   /** The registered query's block pipeline over an in-memory doc set. */
   private def blockWinnow(docs: Seq[(Long, String)], b: Int): Map[Long, Set[String]] = {
-    WinnowFingerprints.register(spark)
     docs.toDF("doc_id", "text")
       .filter(length($"text") >= k + w - 1)
       .select($"doc_id", $"text",
@@ -71,7 +69,6 @@ class TextNativeFunctionsSpec extends SparkSpec {
   }
 
   test("minhash_sigs equals the declarative shingle-min chain exactly") {
-    graft.functions.MinhashSigs.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select($"doc_id", substring($"text", 1, 200).as("t"))
     val native = docs.select($"doc_id", expr("minhash_sigs(t)").as("mhs"))
@@ -99,7 +96,6 @@ class TextNativeFunctionsSpec extends SparkSpec {
   }
 
   test("simhash_bits equals the declarative word-vote chain exactly") {
-    graft.functions.SimhashBits.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select($"doc_id", $"text")
     for (hexDigits <- Seq(4, 8)) {
@@ -129,7 +125,6 @@ class TextNativeFunctionsSpec extends SparkSpec {
   }
 
   test("winnow_fps agrees with the SQL md5 rendering per gram") {
-    WinnowFingerprints.register(spark)
     val one = Seq(("abcdefgh")).toDF("t")
       .select(expr("winnow_fps(t, 1, 8, 1)").getItem(0).as("fp"),
         expr("substring(md5(t), 1, 8)").as("direct"))

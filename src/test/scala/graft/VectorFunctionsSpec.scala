@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.VectorFunctions
 import org.apache.spark.sql.functions._
 
 /** The native CosineSimilarity expression: interpreted vs codegen vs the
@@ -10,7 +9,6 @@ class VectorFunctionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("cosine_sim: golden values, zero-norm safety, codegen path") {
-    VectorFunctions.register(spark)
     val df = Seq(
       (Array(1f, 0f, 0f), Array(1f, 0f, 0f)),   // identical → 1
       (Array(1f, 0f, 0f), Array(0f, 1f, 0f)),   // orthogonal → 0
@@ -29,7 +27,6 @@ class VectorFunctionsSpec extends SparkSpec {
   }
 
   test("quant_cosine_sim is bit-identical to the SQL quantization chain") {
-    VectorFunctions.register(spark)
     // includes negative exact-half quantization points (-0.00025*10000 =
     // -2.5 must round AWAY from zero to -3, like Spark/DuckDB round(),
     // unlike Math.round)
