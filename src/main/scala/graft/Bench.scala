@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 /** Whole-sweep accumulator, sampled around each query (after a
   * listener-bus drain):
   *  - shuffle/spill bytes catch the memory cliffs a wall-time-only sweep
@@ -8,7 +10,11 @@ package graft
   *    a wall-time cliff;
   *  - job/stage/task counts say whether a query is scheduler-bound: a
   *    1-second query that launches 14 jobs wants fewer actions, not a
-  *    plan tweak.
+  *    plan tweak;
+  *  - compiles (generated classes Janino compiled, JVM-wide, so the
+  *    executor threads' compiles count too) say whether a wall is
+  *    compile time: a query that misses the codegen cache pays tens of
+  *    milliseconds per class.
   */
 private class BenchTelemetry extends org.apache.spark.scheduler.SparkListener {
   import java.util.concurrent.atomic.AtomicLong
@@ -39,7 +45,8 @@ private class BenchTelemetry extends org.apache.spark.scheduler.SparkListener {
 /** One query's row of a sweep; `sec` counts only when `ok`. */
 private final case class BenchRow(name: String, sec: Double, ok: Boolean,
     train: Double, build: Double, shuffleMb: Double, spillDiskMb: Double,
-    spillMemMb: Double, jobs: Long, stages: Long, tasks: Long)
+    spillMemMb: Double, jobs: Long, stages: Long, tasks: Long,
+    compiles: Long)
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is fully materialized via a noop-style
@@ -133,6 +140,7 @@ object Bench {
         val sd0 = telem.spillDiskBytes.get()
         val sm0 = telem.spillMemBytes.get()
         val (j0, s0, k0) = (telem.jobs.get, telem.stages.get, telem.tasks.get)
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val tr0 = graft.operators.IndexStore.trainNanos
         val bu0 = graft.queries.Q.buildNanos
         val t0 = System.nanoTime()
@@ -150,7 +158,8 @@ object Bench {
           (telem.shuffleBytes.get() - sh0) / 1048576.0,
           (telem.spillDiskBytes.get() - sd0) / 1048576.0,
           (telem.spillMemBytes.get() - sm0) / 1048576.0,
-          telem.jobs.get - j0, telem.stages.get - s0, telem.tasks.get - k0)
+          telem.jobs.get - j0, telem.stages.get - s0, telem.tasks.get - k0,
+          CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
       }
       graft.queries.Q.release(spark, SparkEntry.keepTagsAfter(i))
       // Spark's ContextCleaner frees shuffle files, broadcast blocks and
@@ -191,12 +200,13 @@ object Bench {
       f"${r.shuffleMb}%.1f")
     val spill = jmap(okRows.filter(r => r.spillDiskMb > 0.01 ||
       r.spillMemMb > 0.01))(r => f"[${r.spillDiskMb}%.1f,${r.spillMemMb}%.1f]")
-    // Spark jobs, completed stages and their tasks per query, failed
-    // queries included: the deterministic counts that belong next to
-    // every wall-time claim.
+    // Spark jobs, completed stages and their tasks per query, and the
+    // classes compiled while it ran, failed queries included: the counts
+    // that belong next to every wall-time claim.
     val jobs = jmap(results)(_.jobs.toString)
     val stages = jmap(results)(_.stages.toString)
     val tasks = jmap(results)(_.tasks.toString)
+    val compiles = jmap(results)(_.compiles.toString)
     val spillDiskTotal = okRows.map(_.spillDiskMb).sum
     val shuffleTotal = okRows.map(_.shuffleMb).sum
     // per-set sums, directly comparable to BASELINE.md's per-set table
@@ -207,7 +217,7 @@ object Bench {
     val total = okRows.map(_.sec).sum
     val trainTotal = okRows.map(_.train).sum
     val buildTotal = okRows.map(_.build).sum
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","train_total":$trainTotal%.3f,"build_total":$buildTotal%.3f,"queries":$qs,"train":$train,"build":$build,"shuffle_mb":$shuffle,"spill_mb":$spill,"jobs":$jobs,"stages":$stages,"tasks":$tasks,"shuffle_total_mb":$shuffleTotal%.1f,"spill_disk_total_mb":$spillDiskTotal%.1f,"sets":$sets,"failed":$failed,"sf":"$sfDir"}"""
+    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","train_total":$trainTotal%.3f,"build_total":$buildTotal%.3f,"queries":$qs,"train":$train,"build":$build,"shuffle_mb":$shuffle,"spill_mb":$spill,"jobs":$jobs,"stages":$stages,"tasks":$tasks,"compiles":$compiles,"shuffle_total_mb":$shuffleTotal%.1f,"spill_disk_total_mb":$spillDiskTotal%.1f,"sets":$sets,"failed":$failed,"sf":"$sfDir"}"""
     println(line)
     // Persist the FULL per-query record of every sweep to a committed
     // file: the driver's BENCH capture truncates to the tail, which in

@@ -23,13 +23,30 @@ import org.apache.spark.sql.SparkSession
   *  - **the native SQL functions** of [[GraftExtensions.functions]],
   *    injected through `withExtensions`, so the session and every
   *    `newSession()` clone of it resolve them with no register call.
+  *  - **a codegen cache that holds the working set**
+  *    ([[CodegenCacheEntries]] generated classes). Spark keeps compiled
+  *    classes in an LRU cache of 100 entries by default, and one
+  *    `query_sweep` pass of the four banded-join queries needs about 170:
+  *    an LRU smaller than a cyclic working set evicts each class before
+  *    its next use, so every repeat recompiled most of them (about 120
+  *    compiles, 2.5-3.2 s of summed compile time, per 4.6-5.3 s sweep on
+  *    4 cpus). A full sf0.01 `Bench` sweep compiles about 3200 classes
+  *    with this cache (4400 with the default). Spark reads the size once
+  *    per JVM, when `CodeGenerator` first loads, from the session conf
+  *    active then; that is why it sits here, where every session is
+  *    built, and not on a query's session.
   */
 object GraftSession {
   val ioCodec = "zstd"
 
+  /** Generated classes Spark's codegen cache holds (its default is 100). */
+  val CodegenCacheEntries = 4096
+
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.io.compression.codec", ioCodec)
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheEntries.toString)
       .withExtensions(GraftExtensions.injectFunctions)
 
   /** `local[n]` width: `SPARK_GRAFT_CPUS`, else the processors this JVM

@@ -65,10 +65,10 @@ def main():
             spill[k] = [round(d, 1), round(mm, 1)]
     sets = {sn: round(med([s["sets"].get(sn, 0.0) for s in sweeps]), 3)
             for sn in sweeps[0].get("sets", {})}
-    # per-query Spark job/stage/task counts (median over the sweeps that
-    # carry them; older records have none)
+    # per-query Spark job/stage/task counts and compiled classes (median
+    # over the sweeps that carry them; older records have none)
     counts = {}
-    for key in ("jobs", "stages", "tasks"):
+    for key in ("jobs", "stages", "tasks", "compiles"):
         counts[key] = {}
         for k in names:
             vals = [s[key][k] for s in sweeps if k in s.get(key, {})]
