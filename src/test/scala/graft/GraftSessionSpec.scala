@@ -1,9 +1,6 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.types._
-import scala.jdk.CollectionConverters._
 
 /** The test harness's session is built by `GraftSession.session`, so it
   * carries what every main's session carries. */
@@ -22,9 +19,10 @@ class GraftSessionSpec extends SparkSpec {
     assert(conf.get("spark.sql.shuffle.partitions") == "4")
   }
 
-  /** 60 documents and 60 16-d unit vectors, a fifth of each a near copy of
-    * an earlier row, so every banded join finds candidate pairs. */
+  /** 60 documents and 60 16-d unit vectors, every fifth from the tenth on
+    * a near copy of an earlier row, so every banded join finds pairs. */
   private def writeFixture(dir: String): Unit = {
+    import spark.implicits._
     val r = new scala.util.Random(7)
     val vocab = Seq("data", "row", "key", "join", "hash", "scan", "sort",
       "group", "merge", "table", "spark", "vector")
@@ -38,13 +36,8 @@ class GraftSessionSpec extends SparkSpec {
         } else Seq.fill(8 + r.nextInt(30))(vocab(r.nextInt(vocab.size)))
           .mkString(" "))
     }
-    val docs = texts.zipWithIndex.map { case (t, i) =>
-      Row(i.toLong, t, "en", s"src${i % 4}", t.length.toLong)
-    }
-    spark.createDataFrame(docs.asJava, StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType))))
+    texts.toSeq.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     val vecs = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
     (0 until 60).foreach { i =>
@@ -53,14 +46,10 @@ class GraftSessionSpec extends SparkSpec {
           vecs(r.nextInt(vecs.size)).map(_ + 0.01 * r.nextGaussian())
         else Array.fill(16)(r.nextGaussian()))
     }
-    val emb = vecs.zipWithIndex.map { case (v, i) =>
+    vecs.toSeq.zipWithIndex.map { case (v, i) =>
       val norm = math.sqrt(v.map(x => x * x).sum)
-      Row(i.toLong, v.map(x => (x / norm).toFloat).toSeq, i % 3)
-    }
-    spark.createDataFrame(emb.asJava, StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("label", IntegerType))))
+      (i.toLong, v.map(x => (x / norm).toFloat))
+    }.toDF("vec_id", "embedding")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
   }
 
@@ -68,7 +57,7 @@ class GraftSessionSpec extends SparkSpec {
   // active when CodeGenerator first loads: in this JVM that is the first
   // codegen of whichever suite runs first, on the shared test session, so
   // the size this case sees is GraftSession.CodegenCacheEntries. With
-  // Spark's default 100 entries the four queries' ~170 classes cycle
+  // Spark's default 100 entries the four queries' ~160 classes cycle
   // through the LRU and the second pass recompiles about as much as the
   // first.
   test("a repeated query set recompiles almost nothing") {
@@ -84,9 +73,9 @@ class GraftSessionSpec extends SparkSpec {
     }
     val first = pass()
     val second = pass()
-    info(s"compiled $first classes in the first pass, $second in the second")
     assert(first > 0)
     // a quarter, not zero: AQE can renumber a few codegen stages
-    assert(second * 4 <= first)
+    assert(second * 4 <= first,
+      s"the second pass compiled $second classes, the first $first")
   }
 }
