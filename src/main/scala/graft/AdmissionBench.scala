@@ -21,8 +21,10 @@ import org.apache.spark.sql.functions._
   *   SPARK_GRAFT_SF_DIR       fixture dir (documents.parquet [+ embeddings])
   *   SPARK_GRAFT_MODE         exact | near | semantic | refresh (default near)
   *   SPARK_GRAFT_BATCH_SIZES  comma ints                (default 1000,4000)
-  *   SPARK_GRAFT_KCAP         refresh mode: quantizer k cap (default none)
-  *   SPARK_GRAFT_STALENESS    refresh mode: staleness bound (default 4.0)
+  *
+  * `semantic` caps its offline quantizer at [[SemanticKCap]] lists;
+  * `refresh` runs the admitter with its defaults: k uncapped, staleness
+  * bound 4.
   *
   * `refresh` is the QUANTIZER-LIFECYCLE form of semantic admission
   * ([[graft.streaming.SemanticAdmitter]]): no offline pre-assignment —
@@ -38,6 +40,11 @@ import org.apache.spark.sql.functions._
   * re-derivation.
   */
 object AdmissionBench {
+  /** Semantic mode's quantizer k cap: keeps the untimed flat-Lloyd build
+    * tractable locally (k = √n uncapped is the cluster setting, where
+    * training is an offline index build). */
+  val SemanticKCap: Int = 256
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus
@@ -52,8 +59,7 @@ object AdmissionBench {
     // deriving it from the fixture (what batch analytics over the
     // whole corpus wants, and what this main did first) measured
     // 3197 → 4005 docs/s at x100/bs=16000 just from undoing the
-    // 160-partition overwidth. Session default = core-count floor;
-    // an explicit SPARK_GRAFT_SHUFFLE_PARTITIONS still wins.
+    // 160-partition overwidth. Session default = core-count floor.
     val spark = GraftSession.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // bytes of the table the batches are actually CUT from — semantic
@@ -103,13 +109,7 @@ object AdmissionBench {
           // as the corpus grows.
           import graft.operators.IvfCodebook
           val nVec = v.count()
-          // the default 256 cap keeps the untimed flat-Lloyd build
-          // tractable locally; SPARK_GRAFT_KCAP lifts it to measure the
-          // k-scaling law past the cap (k = √n uncapped is the cluster
-          // setting, where training is an offline index build)
-          val kCapSem = sys.env.get("SPARK_GRAFT_KCAP")
-            .map(_.trim.toInt).getOrElse(256)
-          val k = math.min(kCapSem,
+          val k = math.min(SemanticKCap,
             math.max(16, math.ceil(math.sqrt(nVec.toDouble)).toInt))
           // past FlatKMax the build is the two-level IMI tree — flat
           // Lloyd is O(n·k)/iteration, the wrong complexity class at
@@ -149,13 +149,10 @@ object AdmissionBench {
       // trigger-derived shuffle width (see the session comment): size the
       // Exchanges to one batch's bytes — Autoscale's same 8 MB/partition
       // target, applied to the trigger, flooring at the core count for
-      // every local batch size; env override wins as everywhere
+      // every local batch size
       val batchBytes =
         if (nRows > 0) fixtureBytes * bs / math.max(1L, nRows) else 0L
-      val width = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-        .map(_.trim.toInt)
-        .getOrElse(graft.operators.Autoscale.shufflePartitions(
-          batchBytes, cpus))
+      val width = graft.operators.Autoscale.shufflePartitions(batchBytes, cpus)
       spark.conf.set("spark.sql.shuffle.partitions", width.toString)
       System.err.println(s"[admission] $mode bs=$bs shuffle width $width " +
         s"(~${batchBytes >> 20} MB/trigger)")
@@ -173,14 +170,10 @@ object AdmissionBench {
       // refresh-mode machinery: one admitter per run; swap events land
       // in `swaps` and their walls are excluded from the per-batch curve
       // (offline index build in production — recorded separately)
-      val kCap = sys.env.get("SPARK_GRAFT_KCAP").map(_.trim.toInt)
-        .getOrElse(Int.MaxValue)
-      val staleness = sys.env.get("SPARK_GRAFT_STALENESS")
-        .map(_.trim.toDouble).getOrElse(4.0)
       val admitter =
         if (mode == "refresh")
           Some(new graft.streaming.SemanticAdmitter(spark, s"$work/sem",
-            simThreshold = 0.4, kCap = kCap, stalenessBound = staleness))
+            simThreshold = 0.4))
         else None
       val swaps = scala.collection.mutable.ArrayBuffer
         .empty[(Int, graft.streaming.SemanticAdmitter.RefreshInfo)]
@@ -330,9 +323,8 @@ object AdmissionBench {
     }.mkString("[", ",", "]")
     val rec = s"""{"metric":"admission","sf":"$sfDir","runs":$line}"""
     println(rec)
-    // machine-greppable: round_close.sh captures THIS path instead of
-    // globbing for the newest file (a best-effort persist failure
-    // would otherwise silently feed a stale record to the flag tool)
+    // the persisted record's path, so a caller reads this run's record
+    // rather than the newest file under bench/
     BenchRecord.write(s"admission-$mode", rec, "admission")
       .foreach(p => System.err.println(s"[admission] record $p"))
     spark.stop()

@@ -59,20 +59,11 @@ object Bench {
     val cpus = GraftSession.cpus
     // Builder-side iteration: comma-separated query-name filter. The
     // driver never sets it — its sweep always times the full surface.
-    // Names are trimmed; unknown names fail loudly rather than letting a
-    // typo read as an all-green empty sweep.
     val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_ONLY")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-        .filter(_.nonEmpty)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.all.map(_.name).toSet
-      require(unknown.isEmpty, s"SPARK_GRAFT_ONLY names not registered: " +
-        unknown.toSeq.sorted.mkString(", "))
-    }
-    // Builder-side set filter (the scaling harness sweeps only the heavy
-    // families) — composes with SPARK_GRAFT_ONLY. Unknown set names fail
-    // loudly like unknown query names do.
+      sys.env.get("SPARK_GRAFT_ONLY").flatMap(SparkEntry.queryFilter)
+    // Builder-side set filter (sweep only some families) — composes with
+    // SPARK_GRAFT_ONLY. Unknown set names fail loudly like unknown query
+    // names do.
     val setsOnly: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_SETS")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -82,10 +73,10 @@ object Bench {
       require(unknown.isEmpty, s"SPARK_GRAFT_SETS names not registered: " +
         unknown.toSeq.sorted.mkString(", "))
     }
-    // Builder-side index-store redirection: the scaling harness gives
-    // each scale its own store root so every scale point pays (and
-    // therefore MEASURES) its own index training — the 1x point must not
-    // silently read artifacts a previous standard-fixture sweep trained.
+    // Builder-side index-store redirection: a sweep on a scaled fixture
+    // gets its own store root, so it pays (and therefore MEASURES) its
+    // own index training instead of reading artifacts a standard-fixture
+    // sweep trained.
     sys.env.get("SPARK_GRAFT_INDEX_DIR")
       .foreach(p => sys.props("graft.index.dir") = p)
     // Shuffle-partition width: derived from the fixture's input bytes
@@ -93,8 +84,7 @@ object Bench {
     // manual dial; the x300 gram-join spill telemetry in SCALING.md §9
     // is the signal it answers). At the standard sf0.1 fixture the
     // derivation floors at the core count, so standard sweeps are
-    // unchanged; an explicit SPARK_GRAFT_SHUFFLE_PARTITIONS still wins
-    // for experiments. SPARK_GRAFT_MASTER: time a set under
+    // unchanged. SPARK_GRAFT_MASTER: time a set under
     // multi-process execution (`local-cluster[n,cores,mem_mb]`) — the
     // process-boundary shuffle cost measurement that must exist before
     // any real-cluster number is quoted.
@@ -223,12 +213,7 @@ object Bench {
     // file: the driver's BENCH capture truncates to the tail, which in
     // round 7 made the first sets' per-query times unrecoverable and
     // left a dedup-set drift unattributable. One small JSON file per
-    // sweep, TIMESTAMPED ONLY: Bench used to also refresh a
-    // `last_sweep.json` alias, but that alias is the round's CLOSING
-    // pointer (the med-3 median record round_close.sh writes), and a
-    // driver-side `runMain graft.Bench` at judge time overwrote it with
-    // a single dirty-window run two rounds straight. Bench now never
-    // touches the pointer; only round_close.sh/med3_merge.py write it.
+    // sweep, timestamped, so no sweep overwrites another's record.
     val sweepRef = BenchRecord.write("sweep", line, "bench")
       .getOrElse("bench/<persist failed>")
     // The driver keeps only the last ~2000 chars of stdout, so the full

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Deterministic fixture scaler for the measured-scaling harness
+/** Deterministic fixture scaler for scaled measurements and oracle gates
   * (builder-side tooling, like Bench/Verify — not a pipeline operator).
   *
   * Produces an M× copy of a fixture directory by replicating every fact

@@ -32,6 +32,18 @@ object SparkEntry {
 
   val all: Seq[QueryDef] = sets.flatMap(_._2)
 
+  /** A comma-separated query-name filter (Bench's `SPARK_GRAFT_ONLY`,
+    * Verify's third argument): names are trimmed and empty ones dropped;
+    * a list with no name is no filter. An unregistered name fails loudly,
+    * naming it, rather than letting a typo read as an empty sweep. */
+  def queryFilter(spec: String): Option[Set[String]] = {
+    val names = spec.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names -- all.map(_.name)
+    require(unknown.isEmpty, "query names not registered: " +
+      unknown.toSeq.sorted.mkString(", "))
+    Some(names).filter(_.nonEmpty)
+  }
+
   /** Tags of `Q.cached` intermediates consumed by MORE THAN ONE query set,
     * mapped to the LAST consuming set in [[sets]] sweep order. At a set
     * boundary Bench/Verify release everything EXCEPT tags whose last

@@ -7,8 +7,7 @@ object Verify {
     // args: sfDir outDir [comma-separated query-name filter — builder-side
     // fast iteration; the driver always passes exactly two args]
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val only: Option[Set[String]] = args.lift(2).flatMap(SparkEntry.queryFilter)
     // SPARK_GRAFT_MASTER overrides the single-JVM default — the
     // multi-process smoke (`local-cluster[n,cores,mem_mb]`) runs the
     // whole contract with executors in SEPARATE JVMs, catching

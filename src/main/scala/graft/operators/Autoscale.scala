@@ -34,8 +34,9 @@ package graft.operators
   *    `initialPartitionNum`-high + coalesce-down discipline a
   *    1000-executor cluster runs.
   *
-  * Used by the measurement mains (Bench / CorpusBuild / AdmissionBench)
-  * whenever `SPARK_GRAFT_SHUFFLE_PARTITIONS` is not set explicitly.
+  * Used by the measurement mains (Bench / Calibrate / CorpusBuild /
+  * Explain / JobTrace through [[resolve]]; AdmissionBench sizes its
+  * trigger width with [[shufflePartitions]]).
   */
 object Autoscale {
 
@@ -73,24 +74,15 @@ object Autoscale {
     math.min(maxPartitions.toLong, math.max(cpus.toLong, waves * cpus)).toInt
   }
 
-  /** The env-or-derived dial the measurement mains share: an explicit
-    * `SPARK_GRAFT_SHUFFLE_PARTITIONS` always wins (the experiment
-    * override); otherwise derive from the fixture directory's bytes and
-    * log the decision so every sweep record carries its width's origin. */
-  def resolve(sfDir: String, cpus: Int,
-      env: Map[String, String] = sys.env): Int =
-    env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS") match {
-      case Some(v) =>
-        val n = v.trim.toInt
-        System.err.println(
-          s"[autoscale] shuffle.partitions=$n (explicit env override)")
-        n
-      case None =>
-        val bytes = dirBytes(sfDir)
-        val n = shufflePartitions(bytes, cpus)
-        System.err.println(f"[autoscale] shuffle.partitions=$n " +
-          f"(derived: ${bytes / 1048576.0}%.1f MB input / " +
-          f"${TargetBytesPerPartition >> 20} MB target, $cpus cores)")
-        n
-    }
+  /** The width the measurement mains share: derived from the fixture
+    * directory's bytes, with the decision logged so every sweep record
+    * carries its width's origin. */
+  def resolve(sfDir: String, cpus: Int): Int = {
+    val bytes = dirBytes(sfDir)
+    val n = shufflePartitions(bytes, cpus)
+    System.err.println(f"[autoscale] shuffle.partitions=$n " +
+      f"(derived: ${bytes / 1048576.0}%.1f MB input / " +
+      f"${TargetBytesPerPartition >> 20} MB target, $cpus cores)")
+    n
+  }
 }

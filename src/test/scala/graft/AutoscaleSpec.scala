@@ -5,7 +5,7 @@ import graft.operators.Autoscale
 
 /** The input-derived shuffle-width formula (round-12 task: the automatic
   * form of the manual x300 spill dial). Pins the three properties the
-  * scaling harness relies on: standard fixtures floor at the core count
+  * measurement mains rely on: standard fixtures floor at the core count
   * (standard sweeps unchanged), the x300-sized input lands at or above
   * the measured zero-spill dial, and widths are whole waves of cores.
   */

@@ -7,9 +7,7 @@ For every run in every record: compare first-half vs last-half docs/s
 (both computed by AdmissionBench from actual per-batch rows). A last
 half more than DECAY_PCT slower than the first half is the O(1)-per-
 batch evidence claim failing — print it as a FLAG line. Report-only
-(exit 0 either way); round_close.sh folds the output into
-bench/SCALING_FLAGS.md so a regression at the scaled grid points is a
-committed artifact, not something that waits for a judge to ask.
+(exit 0 either way).
 """
 import json
 import sys

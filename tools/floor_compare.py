@@ -16,9 +16,9 @@ min_sec = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
 base = json.load(open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                             "..", "BASELINE_QUERIES.json")))["queries"]
 
-# Mechanized window normalization: round_close brackets the med-3 sweep
-# with the graft.Calibrate battery and writes the resulting factor into
-# the record; steady-state times are divided by it before the floor
+# Window normalization: a record may carry `window_factor`, the
+# graft.Calibrate battery of its window over a battery recorded on the
+# same host; steady-state times are divided by it before the floor
 # compare, so a 1.5x-slow host window stops reading as 1.5x inflation.
 wf = float(sweep.get("window_factor", 1.0)) or 1.0
 if wf != 1.0:
