@@ -7,7 +7,8 @@ package graft
   * `SPARK_GRAFT_SF_DIR`, timing each stage's materialization over the
   * SHARED memoized artifacts (near-dup pairs, the 8-gram probe table,
   * the survivors' packing prefix sum are each paid once, attributed to
-  * the first-paying stage via the same `build` accounting Bench uses).
+  * the first-paying stage by the job meter Bench uses, which also
+  * counts each stage's Spark jobs, stages and tasks).
   * Prints one JSON line and persists it under `bench/` — the one number
   * a training-data team quotes for "how long does a corpus build take",
   * next to the per-query numbers the standing sweeps record.
@@ -34,17 +35,16 @@ object CorpusBuild {
     catch { case _: Throwable => () }
     val stages = graft.queries.DedupQueries.corpusBuildStages(spark, sfDir)
     val rows = stages.map { case (name, thunk) =>
-      val bu0 = graft.queries.Q.buildNanos
-      val t0 = System.nanoTime()
-      val df = thunk()
-      df.foreach(_ => ())
-      val total = (System.nanoTime() - t0) / 1e9
-      val build = (graft.queries.Q.buildNanos - bu0) / 1e9
+      val (df, cost) = graft.obs.JobMeter.once(spark) {
+        val df = thunk()
+        df.foreach(_ => ())
+        df
+      }
       // row count is untimed bookkeeping (the attrition readout); the
       // memoized artifacts make the recount cheap
       val n = df.count()
-      System.err.println(f"[corpus-build] $name%-14s $total%8.2fs " +
-        f"(build $build%6.2fs) $n%8d rows")
+      System.err.println(f"[corpus-build] $name%-14s ${cost.wallSec}%8.2fs " +
+        f"(build ${cost.buildSec}%6.2fs, ${cost.jobs} jobs) $n%8d rows")
       // Stage-boundary GC (untimed — same hygiene as Bench's set
       // boundaries): shuffle files are deleted only when the driver GC
       // collects their weak references, and a mostly-idle 64 GB heap may
@@ -55,18 +55,23 @@ object CorpusBuild {
       // on a real cluster the same leak evicts healthy cache blocks and
       // exhausts executor local disks.
       System.gc()
-      (name, total, build, n)
+      (name, cost, n)
     }
     def jmap(xs: Seq[(String, String)]): String =
       xs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def perStage(v: graft.obs.JobCost => String): String =
+      jmap(rows.map(r => r._1 -> v(r._2)))
     val line = jmap(Seq(
       "metric" -> "\"corpus_build\"",
-      "value" -> f"${rows.map(_._2).sum}%.3f",
+      "value" -> f"${rows.map(_._2.wallSec).sum}%.3f",
       "unit" -> "\"sec\"",
-      "build_total" -> f"${rows.map(_._3).sum}%.3f",
-      "stages" -> jmap(rows.map(r => r._1 -> f"${r._2}%.3f")),
-      "build" -> jmap(rows.map(r => r._1 -> f"${r._3}%.3f")),
-      "rows" -> jmap(rows.map(r => r._1 -> r._4.toString)),
+      "build_total" -> f"${rows.map(_._2.buildSec).sum}%.3f",
+      "stages" -> perStage(c => f"${c.wallSec}%.3f"),
+      "build" -> perStage(c => f"${c.buildSec}%.3f"),
+      "jobs" -> perStage(_.jobs.toString),
+      "spark_stages" -> perStage(_.stages.toString),
+      "tasks" -> perStage(_.tasks.toString),
+      "rows" -> jmap(rows.map(r => r._1 -> r._3.toString)),
       "sf" -> ("\"" + sfDir + "\"")))
     println(line)
     BenchRecord.write("corpus_build", line, "corpus-build")

@@ -32,14 +32,17 @@ object SparkEntry {
 
   val all: Seq[QueryDef] = sets.flatMap(_._2)
 
-  /** A comma-separated query-name filter (Bench's `SPARK_GRAFT_ONLY`,
-    * Verify's third argument): names are trimmed and empty ones dropped;
-    * a list with no name is no filter. An unregistered name fails loudly,
-    * naming it, rather than letting a typo read as an empty sweep. */
-  def queryFilter(spec: String): Option[Set[String]] = {
+  /** A comma-separated filter over `registered` names (Bench's
+    * `SPARK_GRAFT_ONLY` and, over the set names, `SPARK_GRAFT_SETS`;
+    * Verify's third argument; Explain's query names): names are trimmed
+    * and empty ones dropped; a list with no name is no filter. An
+    * unregistered name fails loudly, naming it, rather than letting a
+    * typo read as an empty sweep. */
+  def queryFilter(spec: String, registered: Seq[String] = all.map(_.name),
+      kind: String = "query"): Option[Set[String]] = {
     val names = spec.split(",").map(_.trim).filter(_.nonEmpty).toSet
-    val unknown = names -- all.map(_.name)
-    require(unknown.isEmpty, "query names not registered: " +
+    val unknown = names -- registered
+    require(unknown.isEmpty, s"$kind names not registered: " +
       unknown.toSeq.sorted.mkString(", "))
     Some(names).filter(_.nonEmpty)
   }

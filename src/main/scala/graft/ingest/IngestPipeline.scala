@@ -383,11 +383,4 @@ class IngestPipeline(
       try { in.seek(len - 1); in.read() == '\n'.toInt } finally in.close()
     }
   }
-
-  /** The reference's "actual CSV processing" extension point (main.py:129-130):
-    * parse a done upload's rows columnar-ly. Schema-per-upload stays dynamic,
-    * matching the reference's schema-agnostic treatment.
-    */
-  def readCsv(path: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "false").csv(path)
 }

@@ -138,10 +138,9 @@ class LedgerStore(spark: SparkSession, dir: String,
   /** The chain as of sequence `asOf` (inclusive): the newest base at or
     * below `asOf`, then every delta between it and `asOf`. `Long.MaxValue`
     * gives the live chain. An all-delta chain is accepted only when it
-    * provably starts at the beginning of history (first publish = seq 1,
-    * or a legacy seq-0 base below it); otherwise the generations needed
-    * were compacted away and the read throws instead of silently
-    * resolving a truncated state.
+    * provably starts at the beginning of history (first publish = seq 1);
+    * otherwise the generations needed were compacted away and the read
+    * throws instead of silently resolving a truncated state.
     */
   private[ledger] def chainAt(asOf: Long): Seq[ChainLink] = {
     var attempts = 0
@@ -163,9 +162,7 @@ class LedgerStore(spark: SparkSession, dir: String,
           throw new IllegalStateException(
             s"ledger generations at or below $asOf were compacted/" +
               s"retained away under $rootPath")
-        // migration: a pre-CAS ledger has a single `_current` pointer —
-        // read it as sequence 0 rather than silently starting empty
-        return legacyLink(0L).toSeq
+        return Seq.empty
       }
       try {
         val links = scala.collection.mutable.ArrayBuffer.empty[ChainLink]
@@ -182,32 +179,17 @@ class LedgerStore(spark: SparkSession, dir: String,
               throw new java.io.FileNotFoundException(p.toString)
           }
         }
-        // all-delta chain (first merges on an empty ledger) — unless a
-        // legacy `_current` base from the pre-delta layout sits below it
-        if (!foundBase) {
-          legacyLink(links.last.seq - 1) match {
-            case Some(l) => links += l
-            case None if links.last.seq > 1 =>
-              throw new IllegalStateException(
-                s"ledger generations below ${links.last.seq} were " +
-                  s"compacted/retained away; oldest readable generation " +
-                  s"under $rootPath is ${links.last.seq}")
-            case None => ()
-          }
-        }
+        // all-delta chain: only the first merges on an empty ledger
+        if (!foundBase && links.last.seq > 1)
+          throw new IllegalStateException(
+            s"ledger generations below ${links.last.seq} were " +
+              s"compacted/retained away; oldest readable generation " +
+              s"under $rootPath is ${links.last.seq}")
         return links.reverse.toSeq
       } catch { case _: java.io.FileNotFoundException => () /* retry */ }
     }
     throw new java.io.IOException(
       s"ledger pointer listing unstable after 5 attempts under $rootPath")
-  }
-
-  private def legacyLink(seq: Long): Option[ChainLink] = {
-    val legacy = new Path(rootPath, "_current")
-    try {
-      if (fs.exists(legacy)) readPtrFile(legacy).map(parsePtr(seq, _))
-      else None
-    } catch { case _: java.io.FileNotFoundException => None }
   }
 
   /** Highest committed (seq, dir name), if any — the CAS pin. */

@@ -1103,21 +1103,6 @@ object Multimodal {
     out.array()
   }
 
-  /** Minimal GIF89a: signature + logical screen descriptor (no global
-    * color table) + trailer, with `payload` as opaque trailing bytes.
-    */
-  private[multimodal] def gifBytes(width: Int, height: Int,
-      payload: Array[Byte]): Array[Byte] = {
-    val out = java.nio.ByteBuffer.allocate(13 + 1 + payload.length)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    out.put("GIF89a".getBytes)
-      .putShort(width.toShort).putShort(height.toShort)
-      .put(0.toByte).put(0.toByte).put(0.toByte)   // flags, bg, aspect
-      .put(0x3b.toByte)                            // trailer
-      .put(payload)
-    out.array()
-  }
-
   /** Canonical 44-byte PCM WAV header + `payload` as sample data. */
   def wavBytes(channels: Int, sampleRate: Int,
       payload: Array[Byte]): Array[Byte] = {

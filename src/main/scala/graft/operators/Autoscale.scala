@@ -35,8 +35,8 @@ package graft.operators
   *    1000-executor cluster runs.
   *
   * Used by the measurement mains (Bench / Calibrate / CorpusBuild /
-  * Explain / JobTrace through [[resolve]]; AdmissionBench sizes its
-  * trigger width with [[shufflePartitions]]).
+  * Explain through [[resolve]]; AdmissionBench sizes its trigger width
+  * with [[shufflePartitions]]).
   */
 object Autoscale {
 

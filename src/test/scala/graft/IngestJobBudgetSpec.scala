@@ -3,10 +3,8 @@ package graft
 import graft.functions.IngestFunctions.pyIsoformatUtc
 import graft.ingest.IngestPipeline
 import graft.ledger.LedgerStore
+import graft.obs.JobMeter
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.GraftInternal
 import org.apache.spark.sql.functions._
 
 /** The Spark jobs one ingest pass runs, as a regression guard: a pass
@@ -21,20 +19,12 @@ class IngestJobBudgetSpec extends SparkSpec {
   private def writeFile(dir: String, name: String, content: String): Unit =
     Files.write(Paths.get(dir, name), content.getBytes("UTF-8"))
 
-  /** Jobs started by `body`, counted with the listener bus drained on both
-    * sides; and the persisted RDDs it left behind. */
-  private def budget(body: => Unit): (Int, Int) = {
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    GraftInternal.drainListenerBus(spark, 10000L)
+  /** Jobs started by `body`, counted by the job meter; and the persisted
+    * RDDs it left behind. */
+  private def budget(body: => Unit): (Long, Int) = {
     val before = persistedIds()
-    sc.addSparkListener(listener)
-    try { body; GraftInternal.drainListenerBus(spark, 10000L) }
-    finally sc.removeSparkListener(listener)
-    (jobs.get, persistedSince(before))
+    val (_, cost) = JobMeter.once(spark)(body)
+    (cost.jobs, persistedSince(before))
   }
 
   /** A pipeline on a ledger holding one pass over `first.csv`, rewritten

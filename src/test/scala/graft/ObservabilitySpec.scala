@@ -1,5 +1,6 @@
 package graft
 
+import graft.obs.JobMeter
 import graft.operators.Observability
 import org.apache.spark.sql.functions._
 
@@ -28,18 +29,16 @@ class ObservabilitySpec extends SparkSpec {
 
   test("metrics collection adds zero extra Spark jobs") {
     val events = spark.read.parquet(s"$dir/events.parquet")
-    val group = "observability-spec"
-    spark.sparkContext.setJobGroup(group, "observed funnel")
-    try {
+    val (rowsTotal, cost) = JobMeter.once(spark) {
       val (instrumented, obs) = Observability.observed(events,
         "rows_total" -> count(lit(1)))
       instrumented.write.format("noop").mode("overwrite").save()
-      assert(obs.get("rows_total").asInstanceOf[Long] > 0L)
-      // the noop write is one job; the metrics must not have added another
-      val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group)
-      assert(jobs.length === 1,
-        s"observed funnel ran ${jobs.length} jobs; metrics must ride the write job")
-    } finally spark.sparkContext.clearJobGroup()
+      obs.get("rows_total").asInstanceOf[Long]
+    }
+    assert(rowsTotal > 0L)
+    // the noop write is one job; the metrics must not have added another
+    assert(cost.jobs === 1,
+      s"observed funnel ran ${cost.jobs} jobs; metrics must ride the write job")
   }
 
   test("non-numeric metrics are rejected loudly") {

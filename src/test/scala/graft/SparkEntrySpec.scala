@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The query-name filter Bench and Verify share. */
+/** The name filter Bench, Verify and Explain share. */
 class SparkEntrySpec extends AnyFunSuite {
 
   test("queryFilter trims names, drops empty ones, and reads none as no filter") {
@@ -18,5 +18,15 @@ class SparkEntrySpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("q1_pricing_sumary"), e.getMessage)
     assert(!e.getMessage.contains("q1_pricing_summary"), e.getMessage)
+  }
+
+  test("queryFilter over the set names throws on an unknown set and names it") {
+    val sets = SparkEntry.sets.map(_._1)
+    assert(SparkEntry.queryFilter(" dedup,text ", sets, "set") ===
+      Some(Set("dedup", "text")))
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.queryFilter("dedup,dedupe", sets, "set")
+    }
+    assert(e.getMessage.contains("set names not registered: dedupe"), e.getMessage)
   }
 }

@@ -31,30 +31,6 @@ class LedgerCasSpec extends SparkSpec {
     assert(ids == Set("u1", "u2"))
   }
 
-  test("pre-CAS ledgers (single _current pointer) are migrated, not dropped") {
-    val dir = tmpDir("cas-legacy")
-    val store = new LedgerStore(spark, dir)
-    store.merge(rows("u1"))
-    // convert to the legacy layout: one `_current` file naming the live
-    // snapshot, no _ptr-* files at all
-    val f = new java.io.File(dir)
-    val ptr = f.listFiles().filter(_.getName.startsWith("_ptr-")).head
-    val version = new String(
-      java.nio.file.Files.readAllBytes(ptr.toPath), "UTF-8").trim
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, "_current"), version.getBytes("UTF-8"))
-    // remove the pointer files AND their checksum sidecars — a real legacy
-    // dir (round-2 layout) has only `_current` (+ its own .crc)
-    f.listFiles().filter(x => x.getName.startsWith("_ptr-") ||
-      x.getName.startsWith("._ptr-")).foreach(_.delete())
-
-    val store2 = new LedgerStore(spark, dir)
-    assert(store2.read().count() == 1) // legacy state visible, not empty
-    store2.merge(rows("u2")) // upgrades to a _ptr-* publish
-    val ids = store2.read().select("upload_id").as[String].collect().toSet
-    assert(ids == Set("u1", "u2"))
-  }
-
   test("merges append deltas; the chain compacts into a base snapshot") {
     val dir = tmpDir("delta-ledger")
     val store = new LedgerStore(spark, dir, compactEvery = 3)

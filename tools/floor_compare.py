@@ -6,7 +6,9 @@ where the sweep's train/build maps explain it. Builder-side tooling.
 Usage: floor_compare.py <sweep.json> [threshold=2.0] [min_sec=1.5]
 Rows are flagged when steady-state time (total - build - train, where
 build/train are this sweep's first-payer shares) exceeds threshold x
-the floor AND the larger time is at least min_sec.
+the floor AND the larger time is at least min_sec. A record that carries
+the job meter's `gap_ms` and `task_ms` shows them beside each flagged
+row, telling driver-side gaps from task time.
 """
 import json, os, sys
 
@@ -27,6 +29,8 @@ if wf != 1.0:
 qs = sweep["queries"]
 train = sweep.get("train", {})
 build = sweep.get("build", {})
+gap_ms = sweep.get("gap_ms", {})
+task_ms = sweep.get("task_ms", {})
 rows, flags = [], []
 tot, ftot, fp_covered = 0.0, 0.0, 0.0
 for k, v in qs.items():
@@ -60,7 +64,9 @@ if flags:
     print(f"\n{len(flags)} rows with steady-state > {thr}x floor "
           f"(steady = total - first-payer share):")
     for r, k, v, fp, steady, f in sorted(flags, reverse=True):
+        split = (f"; driver gap {gap_ms[k]} ms, task {task_ms[k]} ms"
+                 if k in gap_ms and k in task_ms else "")
         print(f"  {k}: total {v:.2f}s (first-payer {fp:.2f}s) "
-              f"steady {steady:.2f}s vs floor {f:.2f}s = {r:.1f}x")
+              f"steady {steady:.2f}s vs floor {f:.2f}s = {r:.1f}x{split}")
 else:
     print(f"\nno rows with steady-state > {thr}x floor at >= {min_sec}s")
